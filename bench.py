@@ -24,80 +24,10 @@ import time
 from pyspark.sql import functions as F
 
 from raptor_spark.session import get_spark
-from raptor_spark.queries import QUERIES
+from raptor_spark.queries import QUERIES, REGISTRY
 
-# Headline set: flagship backfill + each operator family at sf0.1.
-HEADLINE = [
-    "backfill_wide",        # PIT as-of merge of 3 features (flagship)
-    "api_backfill",         # decorator API + handler AST compile
-    "kp_filtered",          # fused filtered keep_previous (lag ignore nulls)
-    "store_read_pit",       # production read: materialize + store as-of
-    "rest_enrich",          # S5 REST enrichment (file:// fetch + broadcast)
-    "online_serve",         # online-store latest+staleness serving
-    "hetero_keys",          # two key families, per-family as-of passes
-    "pit_asof_join",        # J1 single-feature as-of
-    "window_multi_24h",     # A1-A3 exact sliding window
-    "window_distinct_6h",   # A5 exact distinct window
-    "window_approx_distinct_6h",  # A6 HLL two-phase
-    "hll_accuracy",         # A6 exact-vs-HLL error gate
-    "two_phase_1h_10m",     # A8 bucketed two-phase (scale path)
-    "salted_user_stats",    # salted two-level skew agg
-    "lag_lead",             # W2/W6
-    "sessionize_30m",       # W7
-    "session_stats_30m",    # W7 + bounds agg
-    "latest_per_key",       # W3
-    "dedup_exact",          # exact dedup
-    "text_stats",           # quality/token/fingerprint
-    "lang_id",              # n-gram language ID
-    "minhash_lsh",          # MinHash+LSH near-dup
-    "dup_clusters",         # connected components of dup pairs
-    "simhash_dedup",        # SimHash near-dup groups
-    "token_freq",           # BPE-ish tokenize + corpus top-k
-    "cms_heavy_hitters",    # count-min sketch estimates (oracle-exact)
-    "domain_stats",         # per-domain curation stats (URL extract)
-    "value_quantiles",      # exact grouped p50/p95/p99
-    "doc_chunks",           # context-window chunking (500c/100c overlap)
-    "pack_sequences",       # two-level prefix-sum sequence packing
-    "clean_corpus",         # composed quality/lang filter + dedup keep-rep
-    "decontaminate",        # 8-gram collision vs benchmark set (broadcast)
-    "pii_scrub",            # staged PII/link masking + redaction counts
-    "mixture_sample",       # deterministic stratified data mixing
-    "repetition",           # intra-doc n-gram repetition ratio
-    "containment",          # partial-overlap window fingerprints
-    "media_features",       # multimodal mapInPandas plumbing
-    "media_frames",         # video frame-sample fan-out
-    "knn_cosine",           # brute-force ANN baseline
-    "embedding_neardup",    # LSH-blocked cosine near-dup
-    "ann_lsh",              # bucketed approximate top-k
-    "ann_ivf",              # IVF-Flat inverted lists
-    "ann_ivf_kmeans",       # IVF with trained (Lloyd) centroids
-    "pricing_summary",      # TPC-H Q1-style agg
-    "revenue_by_nation",    # multi-table broadcast join
-    "topk_orders_per_cust", # window top-k
-    "shipping_priority",    # TPC-H Q3-style 3-way join + top-10
-    "cust_without_orders",  # left-anti join (NOT EXISTS)
-    "split_assign",         # deterministic train/val/test hash split
-    "profile_docs",         # one-pass per-column corpus profile
-    "lsh_verify",           # LSH candidates -> exact edit-distance verify
-    "embedding_quantize",   # int8 quantization + reconstruction MSE
-    "embedding_project",    # signed random projection (JL transform)
-    "conv_rollup",          # pivot rollup + JSON prop extraction
-    "unigram_logprob",      # corpus-self-trained unigram LM filter
-    "bm25_search",          # BM25 top-k lexical retrieval
-    "boilerplate_scrub",    # cross-doc segment dedup (line-dedup analog)
-    "fuzzy_dedup",          # end-to-end LSH -> CC -> keep-rep filter
-    "semantic_dedup",       # SemDeDup: embedding CC -> keep-rep filter
-    "tokenize_corpus",      # vocab build + rank-id token sequences
-    "dedup_incremental",    # batch-vs-corpus probe of signature stores
-    "domain_cap",           # salted two-level per-domain top-n
-    "quality_classifier",   # distributed-GD linear quality filter
-    "hybrid_search",        # BM25 recall -> cosine re-rank
-    "budget_sample",        # per-source token-budget greedy fill
-    "repeated_span_scrub",  # exact repeated-substring scrub (Lee et al.)
-    "url_dedup",            # URL-canonicalization dedup (CCNet first pass)
-    "bloom_dedup",          # mergeable Bloom membership (vs ground truth)
-    "bucket_merge_dedup",   # J6/S8 cleanup-MERGE (dead flush beats alive)
-]
+# Headline set: every registry record with bench=True, in registry order.
+HEADLINE = [q.name for q in REGISTRY if q.bench]
 
 
 def _force(df) -> int:
@@ -161,7 +91,7 @@ def main() -> None:
     if only:
         unknown = set(only) - set(HEADLINE)
         if unknown:
-            print(f"unknown query name(s): {sorted(unknown)}", file=sys.stderr)
+            print(f"not a bench query: {sorted(unknown)}", file=sys.stderr)
             sys.exit(2)
 
     spark = get_spark(app="raptor_spark_bench")

@@ -71,25 +71,6 @@ def word_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(sh)
 
 
-def word_shingles(text: Column | str, n: int = 3) -> Column:
-    """n-gram word shingles as an array<string> (distinct). For
-    per-row hot paths prefer staging ``split(_norm(text), ' ')`` in
-    its own select and calling :func:`word_shingles_from_tokens`."""
-    t = F.col(text) if isinstance(text, str) else text
-    return word_shingles_from_tokens(F.split(_norm(t), " "), n)
-
-
-def char_shingles(text: Column | str, n: int = 5) -> Column:
-    """character n-gram shingles (distinct)."""
-    t = _norm(F.col(text) if isinstance(text, str) else text)
-    k = F.length(t) - (n - 1)
-    sh = F.when(
-        k > 0,
-        F.transform(F.sequence(F.lit(1), k), lambda i: t.substr(i, F.lit(n))),
-    ).otherwise(F.array(t))
-    return F.array_distinct(sh)
-
-
 # MinHash permutation constants: perm_i(h) = (a_i*h + b_i) mod P over
 # h = md5_long(shingle) mod 2^30. P < 2^30 keeps a_i*h < 2^60 (no
 # bigint overflow under ANSI mode, same arithmetic in any SQL engine).
@@ -104,23 +85,6 @@ def minhash_coeffs(k: int) -> list[tuple[int, int]]:
         b = (0x85EBCA77 * (i + 1)) % MINHASH_P
         out.append((a, b))
     return out
-
-
-def minhash_signature(shingles: Column, k: int = 16) -> Column:
-    """k-permutation MinHash signature as array<long>.
-
-    Each shingle is md5-hashed ONCE (the expensive step); the k
-    permutations are linear congruential transforms of that hash —
-    k ways cheaper than k independent md5 passes, and portable to any
-    engine with md5 + bigint arithmetic."""
-    hashes = F.transform(shingles, lambda s: md5_long(s) % MINHASH_H_MOD)
-    sigs = [
-        F.array_min(
-            F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P)
-        )
-        for a, b in minhash_coeffs(k)
-    ]
-    return F.array(*sigs)
 
 
 def _bucket_pairs(buckets: DataFrame) -> DataFrame:

@@ -1,6 +1,8 @@
 """Driver-facing query catalog: every implemented operator exposed as a
 (spark, sf_dir) -> DataFrame builder plus a matching DuckDB oracle SQL
-(driver correctness gate, see repo:__spark_entry__.py).
+(driver correctness gate, see repo:__spark_entry__.py). Each query is
+declared once, as a ``Query`` record of ``REGISTRY`` at the end of this
+module; ``QUERIES`` and ``ORACLE_SQL`` are derived from it.
 
 Naming contract: every computed column is aliased identically in the
 Spark plan and the oracle SQL. All order-sensitive float aggregates go
@@ -10,6 +12,7 @@ double division, so Spark and DuckDB agree bit-for-bit after round(6).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1706,98 +1709,6 @@ def q_rest_enrich(spark, sf_dir):
     return out.select("c_custkey", "nation_name", "region_key")
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # -- new in round 5 — never driver-checked --
-    "rest_enrich": q_rest_enrich,
-    "bucket_merge_dedup": q_bucket_merge_dedup,
-    # -- last driver-green in r3 (aged 2 rounds) — rotated back in --
-    "pit_asof_join": q_pit_asof_join,
-    "two_phase_1h_10m": q_two_phase_1h_10m,
-    "salted_user_stats": q_salted_user_stats,
-    "window_count_1h": q_window_count_1h,
-    "window_multi_24h": q_window_multi_24h,
-    "window_distinct_6h": q_window_distinct_6h,
-    "lag_lead": q_lag_lead,
-    "keep_previous_age_guard": q_keep_previous_age_guard,
-    "sessionize_30m": q_sessionize_30m,
-    "session_stats_30m": q_session_stats_30m,
-    "valid_till_1h": q_valid_till_1h,
-    "latest_per_key": q_latest_per_key,
-    "dedup_exact": q_dedup_exact,
-    "text_stats": q_text_stats,
-    "lang_id": q_lang_id,
-    "minhash_lsh": q_minhash_lsh,
-    "ngram_jaccard": q_ngram_jaccard,
-    "dup_clusters": q_dup_clusters,
-    "simhash_dedup": q_simhash_dedup,
-    "token_freq": q_token_freq,
-    "domain_stats": q_domain_stats,
-    "repetition": q_repetition,
-    # -- plans changed in round 5 — r4 green is stale --
-    "profile_docs": q_profile_docs,
-    "lsh_verify": q_lsh_verify,
-    "repeated_span_scrub": q_repeated_span_scrub,
-    "boilerplate_scrub": q_boilerplate_scrub,
-    "url_dedup": q_url_dedup,
-    "ann_ivf_kmeans": q_ann_ivf_kmeans,
-    "store_read_pit": q_store_read_pit,
-    "bloom_dedup": q_bloom_dedup,
-    # -- flagship backfill family — always in-window --
-    "backfill_wide": q_backfill_wide,
-    "api_backfill": q_api_backfill,
-    "kp_filtered": q_kp_filtered,
-    "online_serve": q_online_serve,
-    "hetero_keys": q_hetero_keys,
-    # -- once-checked (first green row = r4) --
-    "knn_cosine": q_knn_cosine,
-    "embedding_neardup": q_embedding_neardup,
-    "semantic_dedup": q_semantic_dedup,
-    "ann_lsh": q_ann_lsh,
-    "ann_ivf": q_ann_ivf,
-    "split_assign": q_split_assign,
-    "embedding_quantize": q_embedding_quantize,
-    "embedding_project": q_embedding_project,
-    "conv_rollup": q_conv_rollup,
-    "unigram_logprob": q_unigram_logprob,
-    "bm25_search": q_bm25_search,
-    "revenue_by_nation": q_revenue_by_nation,
-    "topk_orders_per_cust": q_topk_orders_per_cust,
-    # ---------------- window boundary: position 50 ----------------
-    # shipping_priority evicted by rest_enrich (r5 late addition). Its
-    # only driver-green row is r4 (aged 1 round at eviction) — NOT the
-    # "green in r2 AND r3" tail criterion; it leaves the window anyway
-    # because a never-checked query outranks a once-checked one when
-    # the window is full. Eviction order when forced: oldest-green
-    # first among once-checked rows, never a NEVER_CHECKED row.
-    "shipping_priority": q_shipping_priority,
-    # -- long-stable tail: driver-green in r4 (and most in r2/r3), --
-    # -- pinned by exact-mode check_oracles + pytest every round  --
-    "pricing_summary": q_pricing_summary,
-    "cust_without_orders": q_cust_without_orders,
-    "hll_accuracy": q_hll_accuracy,
-    "window_approx_distinct_6h": q_window_approx_distinct_6h,
-    "cms_heavy_hitters": q_cms_heavy_hitters,
-    "pack_sequences": q_pack_sequences,
-    "budget_sample": q_budget_sample,
-    "fuzzy_dedup": q_fuzzy_dedup,
-    "dedup_incremental": q_dedup_incremental,
-    "stream_dedup": q_stream_dedup,
-    "tokenize_corpus": q_tokenize_corpus,
-    "domain_cap": q_domain_cap,
-    "quality_classifier": q_quality_classifier,
-    "hybrid_search": q_hybrid_search,
-    "decontaminate": q_decontaminate,
-    "clean_corpus": q_clean_corpus,
-    "mixture_sample": q_mixture_sample,
-    "doc_chunks": q_doc_chunks,
-    "pii_scrub": q_pii_scrub,
-    "value_quantiles": q_value_quantiles,
-    "containment": q_containment,
-    "media_features": q_media_features,
-    "media_frames": q_media_frames,
-}
-
-
 # ------------------------------------------------------------ oracle SQL
 # DuckDB SQL computing the same result on the same parquet views.
 
@@ -2390,18 +2301,60 @@ _LEV_THRESHOLD = 0.8
 _LEV_SLACK = repr(1.0 - _LEV_THRESHOLD)
 
 
-ORACLE_SQL: dict[str, str] = {
+# ------------------------------------------------------------ registry
+# One record per catalog query. QUERIES, ORACLE_SQL, bench.py's
+# headline set and tools/plan_audit.py's audit list all derive from it.
+#
+# Declaration order IS the driver order: the driver's per-round
+# correctness gate checks only the FIRST 50 entries of queries(). Each
+# record's `window` says why it sits where it does; the groups are
+# declared contiguously in WINDOWS order:
+#   new       never driver-checked — must stay inside the window
+#   aged      last driver-green two rounds ago — rotated back in
+#   changed   plan changed since its last driver-green row
+#   flagship  backfill family — always inside the window
+#   once      one driver-green row; fills the rest of the window
+#   tail      long-stable, pinned by exact-mode check_oracles + pytest
+# Rotation rule: a new query is declared at the front as "new"; a
+# rotation moves ONE record into its group and edits its `window`.
+# There is no sort step.
+WINDOWS = ("new", "aged", "changed", "flagship", "once", "tail")
+
+
+@dataclass(frozen=True)
+class Query:
+    """A catalog query: its (spark, sf_dir) -> DataFrame builder, its
+    driver-window group, the DuckDB SQL computing the same result on
+    the same parquet views (None = rows-only), whether bench.py times
+    it, and the plan-audit note PLANS.md prints for it."""
+
+    name: str
+    build: Callable[[SparkSession, str], DataFrame]
+    window: str
+    oracle: str | None
+    bench: bool = True
+    note: str | None = None
+
+
+REGISTRY: tuple[Query, ...] = (
+    # -- new: added round 5, never driver-checked --
     # REST enrichment twin: the file:// fixture content derives from
     # the nation table, so the fetched-and-parsed fields must equal the
     # relational join (fetch + from_json + broadcast is what's tested)
-    "rest_enrich": """
+    Query("rest_enrich", q_rest_enrich, "new", oracle="""
 SELECT c_custkey, n_name AS nation_name,
        CAST(n_regionkey AS INT) AS region_key
 FROM customer JOIN nation ON c_nationkey = n_nationkey
-""",
+""", note=(
+        "S5 REST enrichment: ONE distinct over the key columns bounds "
+        "every HTTP call (fetch fan-out = |distinct keys|, never per "
+        "spine row); the |keys|-row fetched frame broadcast-joins back, "
+        "so the spine is never shuffled for enrichment. The only "
+        "Python is the Arrow-batched fetch loop itself."
+    )),
     # cleanup-MERGE dedup twin: dead (final) flush beats alive, highest
     # flush_seq among alive-only buckets — same window order both sides
-    "bucket_merge_dedup": """
+    Query("bucket_merge_dedup", q_bucket_merge_dedup, "new", oracle="""
 WITH base AS (
   SELECT 'agg:' || event_type AS fqn, CAST(user_id AS VARCHAR) AS keys,
          epoch_us(ts) // 600000000 AS bucket, event_id,
@@ -2422,11 +2375,324 @@ FROM fv
 QUALIFY row_number() OVER (
   PARTITION BY fqn, keys, bucket
   ORDER BY bucket_active ASC NULLS LAST, flush_seq DESC NULLS LAST) = 1
-""",
+""", note=(
+        "Cleanup-MERGE semantics (J6/S8): alive + dead flush streams "
+        "union, then ONE window keyed (fqn, keys, bucket) keeps the "
+        "final (dead) flush, highest flush_seq among alive-only "
+        "buckets. Rows per window partition are bounded by the flush "
+        "multiplicity of one bucket; the exchange carries the flush "
+        "stream, never source data."
+    )),
+    # -- aged: last driver-green in r3 (aged 2 rounds), rotated back in --
+    Query("pit_asof_join", q_pit_asof_join, "aged", oracle="""
+WITH spine AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+-- same-ts feature rows collapse to the highest event_id BEFORE the
+-- as-of (DuckDB ASOF has no tie control; the engine's
+-- feature_order_col resolves the identical winner)
+fv AS (
+  SELECT user_id, ts, value FROM (
+    SELECT user_id, ts, value,
+      row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
+    FROM events) WHERE rn = 1)
+SELECT s.event_id, s.user_id, s.ts,
+       CASE WHEN f.ts >= s.ts - INTERVAL 1 HOUR THEN f.value END AS last_value
+FROM spine s ASOF LEFT JOIN fv f
+  ON s.user_id = f.user_id AND f.ts <= s.ts
+""", note=(
+        "Union-merge as-of: spine and feature rows are tagged, "
+        "unioned, and resolved with last(ignorenulls) over ONE hash "
+        "shuffle + sort — O(n log n per key) vs a range join's "
+        "O(spine x history)."
+    )),
+    Query("two_phase_1h_10m", q_two_phase_1h_10m, "aged", oracle="""
+WITH p AS (
+  SELECT user_id, epoch_us(ts) // 600000000 AS bucket,
+         count(value) AS c, sum(CAST(value AS DECIMAL(18,2))) AS s
+  FROM events GROUP BY 1, 2
+)
+SELECT user_id,
+  make_timestamp((bucket + 1) * 600000000) AS ts,
+  CAST(sum(c) OVER w AS DOUBLE) AS cnt_1h,
+  round(CAST(sum(s) OVER w AS DOUBLE), 6) AS sum_1h
+FROM p
+WINDOW w AS (PARTITION BY user_id ORDER BY bucket RANGE BETWEEN 5 PRECEDING AND CURRENT ROW)
+""", note=(
+        "Scale path for windows: map-side combined partials per "
+        "(key, bucket) collapse the data BEFORE the only shuffle; the "
+        "merge window runs over ~|keys| x |buckets| rows. At 10^12 "
+        "events the shuffle moves pre-aggregated rows only."
+    )),
+    Query("salted_user_stats", q_salted_user_stats, "aged", oracle="""
+SELECT user_id,
+  CAST(count(value) AS DOUBLE) AS n_events,
+  round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 6) AS sum_value,
+  CAST(min(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS min_value,
+  CAST(max(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS max_value,
+  floor(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
+        / count(value) * 1000000 + 0.5) / 1000000 AS avg_value
+FROM events GROUP BY 1
+""", note=(
+        "Two-level agg: partials per (key, data-derived salt) then "
+        "merge per key — a single hot key's rows spread over n_salts "
+        "reducers. DECIMAL partials keep the result bit-identical "
+        "across any physical layout."
+    )),
+    Query("window_count_1h", q_window_count_1h, "aged", bench=False, oracle=f"""
+SELECT event_id, user_id, ts,
+       CAST(count(value) OVER ({_W1H}) AS DOUBLE) AS cnt_1h
+FROM events
+"""),
+    Query("window_multi_24h", q_window_multi_24h, "aged", oracle=f"""
+SELECT event_id, user_id, ts,
+  round(CAST(sum(CAST(value AS DECIMAL(18,2))) OVER ({_W24}) AS DOUBLE), 6) AS sum_24h,
+  floor(CAST(sum(CAST(value AS DECIMAL(18,2))) OVER ({_W24}) AS DOUBLE)
+        / CAST(count(value) OVER ({_W24}) AS DOUBLE) * 1000000 + 0.5)
+    / 1000000 AS avg_24h,
+  CAST(min(CAST(value AS DECIMAL(18,2))) OVER ({_W24}) AS DOUBLE) AS min_24h,
+  CAST(max(CAST(value AS DECIMAL(18,2))) OVER ({_W24}) AS DOUBLE) AS max_24h
+FROM events
+"""),
+    Query("window_distinct_6h", q_window_distinct_6h, "aged", oracle=f"""
+SELECT event_id, user_id, ts,
+       CAST(count(DISTINCT event_type) OVER ({_W6H}) AS DOUBLE) AS dcnt_6h
+FROM events
+"""),
+    Query("lag_lead", q_lag_lead, "aged", oracle="""
+SELECT event_id, user_id, ts,
+  lag(value) OVER w AS prev_value,
+  lead(value) OVER w AS next_value,
+  lag(event_type) OVER w AS prev_type
+FROM events
+WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+"""),
+    Query("keep_previous_age_guard", q_keep_previous_age_guard, "aged", bench=False, oracle="""
+SELECT event_id, user_id, ts,
+  CASE WHEN epoch_us(lag(ts) OVER w) >= epoch_us(ts) - 3600000000
+       THEN lag(value) OVER w END AS prev_value_1h
+FROM events
+WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+"""),
+    Query("sessionize_30m", q_sessionize_30m, "aged", oracle="""
+WITH g AS (
+  SELECT event_id, user_id, ts,
+    CASE WHEN lag(ts) OVER w IS NULL THEN 0
+         WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1
+         ELSE 0 END AS brk
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+), s AS (
+  SELECT event_id, user_id, ts,
+    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT) AS session_idx
+  FROM g
+)
+SELECT event_id, user_id, ts, session_idx,
+       CAST(user_id AS VARCHAR) || '#' || CAST(session_idx AS VARCHAR) AS session_id
+FROM s
+"""),
+    Query("session_stats_30m", q_session_stats_30m, "aged", oracle="""
+WITH g AS (
+  SELECT user_id, ts,
+    CASE WHEN lag(ts) OVER w IS NULL THEN 0
+         WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1
+         ELSE 0 END AS brk
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+), s AS (
+  SELECT user_id, ts,
+    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT) AS session_idx
+  FROM g
+)
+SELECT user_id, session_idx, min(ts) AS session_start, max(ts) AS session_end,
+       count(*) AS n_events
+FROM s GROUP BY 1, 2
+"""),
+    Query("valid_till_1h", q_valid_till_1h, "aged", bench=False, oracle="""
+SELECT event_id, user_id, ts,
+  least(coalesce(lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
+                 ts + INTERVAL 1 HOUR),
+        ts + INTERVAL 1 HOUR) AS valid_till
+FROM events
+"""),
+    Query("latest_per_key", q_latest_per_key, "aged", oracle="""
+SELECT user_id, event_id, ts, value FROM (
+  SELECT user_id, event_id, ts, value,
+    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+  FROM events
+) WHERE rn = 1
+"""),
+    Query("dedup_exact", q_dedup_exact, "aged", oracle=f"""
+SELECT md5({_NORM}) AS fp, min(doc_id) AS rep_id, count(*) AS n_dups
+FROM documents GROUP BY 1
+"""),
+    Query("text_stats", q_text_stats, "aged", oracle=f"""
+SELECT doc_id,
+  CASE WHEN length(trim(text)) = 0 THEN 0
+       ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
+  length(text) AS n_chars_computed,
+  floor((CASE WHEN length(text)>0 THEN CAST(length(regexp_replace(text,'[^A-Za-z]','','g')) AS DOUBLE)/length(text) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS alpha_ratio,
+  floor((CASE WHEN length(text)>0 THEN CAST(length(text)-length(regexp_replace(text,'[.,!?;:]','','g')) AS DOUBLE)/length(text) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS punct_ratio,
+  floor((CASE WHEN length(text)>0 THEN CAST(length(text)-length(regexp_replace(text,'[A-Z]','','g')) AS DOUBLE)/length(text) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS upper_ratio,
+  floor((CASE WHEN (CASE WHEN length(trim(text)) = 0 THEN 0
+       ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) > 0
+    THEN CAST({_lang_hits_sql('en')} AS DOUBLE)
+         / (CASE WHEN length(trim(text)) = 0 THEN 0
+            ELSE len(regexp_split_to_array(trim(text), '\\s+')) END)
+    ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS stopword_ratio,
+  {_quality_sql()} AS quality,
+  md5({_NORM}) AS fingerprint
+FROM documents
+"""),
+    Query("lang_id", q_lang_id, "aged", oracle=f"""
+WITH p AS (SELECT doc_id, text FROM documents),
+h AS (SELECT doc_id,
+  {_lang_hits_sql('en')} AS h_en,
+  {_lang_hits_sql('de')} AS h_de,
+  {_lang_hits_sql('fr')} AS h_fr,
+  {_lang_hits_sql('es')} AS h_es
+FROM p)
+SELECT doc_id,
+  CASE
+    WHEN h_en > 0 AND h_en >= h_de AND h_en >= h_fr AND h_en >= h_es THEN 'en'
+    WHEN h_de > 0 AND h_de >= h_fr AND h_de >= h_es AND h_de >= h_en THEN 'de'
+    WHEN h_fr > 0 AND h_fr >= h_es AND h_fr >= h_en AND h_fr >= h_de THEN 'fr'
+    WHEN h_es > 0 AND h_es >= h_en AND h_es >= h_de AND h_es >= h_fr THEN 'es'
+    ELSE 'und' END AS lang_guess
+FROM h
+"""),
+    Query("minhash_lsh", q_minhash_lsh, "aged", oracle=_minhash_sql(), note=(
+        "Explicit repartition(parallelism) before the md5 stage "
+        "(defeats AQE's coalesce-to-1 on small bytes with heavy CPU); "
+        "staged selects stop Catalyst re-evaluating the shingle/hash "
+        "arrays; ONE shuffle on (band, bsig); bucket cap bounds the "
+        "local pair fan-out."
+    )),
+    Query("ngram_jaccard", q_ngram_jaccard, "aged", bench=False, oracle=f"""
+WITH docs AS (SELECT doc_id, source, {_NORM} AS norm FROM documents),
+toks AS (SELECT doc_id, source, norm, string_split(norm, ' ') AS w FROM docs),
+sh AS (
+  SELECT doc_id, source,
+    CASE WHEN len(w) >= 3
+      THEN list_distinct(list_transform(generate_series(1, len(w) - 2),
+           i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
+      ELSE [norm] END AS shingles
+  FROM toks)
+SELECT id_a, id_b, jaccard_sim FROM (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+    floor(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
+          / len(list_distinct(list_concat(a.shingles, b.shingles)))
+          * 1000000 + 0.5) / 1000000 AS jaccard_sim
+  FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id < b.doc_id)
+WHERE jaccard_sim >= 0.5
+"""),
+    Query("dup_clusters", q_dup_clusters, "aged", oracle=_dup_clusters_sql()),
+    Query("simhash_dedup", q_simhash_dedup, "aged", oracle=_simhash_sql()),
+    Query("token_freq", q_token_freq, "aged", oracle=f"""
+WITH toks AS (
+  SELECT unnest(regexp_extract_all(lower(text), '{_TOKEN_RE}')) AS token
+  FROM documents),
+counts AS (SELECT token, count(*) AS n FROM toks GROUP BY 1)
+SELECT token, n,
+  CAST(row_number() OVER (ORDER BY n DESC, token) AS INT) AS rank
+FROM counts
+QUALIFY rank <= 20
+""", note=(
+        "orderBy+limit compiles to TakeOrderedAndProject — "
+        "per-partition top-k, merged on the driver; no single-partition "
+        "window over the (unbounded) vocabulary."
+    )),
+    Query("domain_stats", q_domain_stats, "aged", oracle=f"""
+WITH d AS (
+  SELECT doc_id,
+    CASE WHEN doc_id % 5 = 0 THEN text
+      || ' See https://w' || CAST(doc_id % 23 AS VARCHAR)
+      || '.example' || CAST(doc_id % 7 AS VARCHAR)
+      || '.org/p/' || CAST(doc_id AS VARCHAR)
+      || ' and http://cdn' || CAST(doc_id % 11 AS VARCHAR)
+      || '.example.net/x.'
+    ELSE text END AS text
+  FROM documents),
+ex AS (
+  SELECT doc_id, {_quality_sql()} AS q,
+    lower(regexp_extract(u, 'https?://([^/:?#]+)', 1)) AS domain
+  FROM (
+    SELECT doc_id, text,
+      unnest(regexp_extract_all(text, 'https?://[^\\s]+')) AS u
+    FROM d))
+SELECT domain,
+  count(DISTINCT doc_id) AS n_docs,
+  count(*) AS n_urls,
+  floor((CAST(sum(CAST(floor(q * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
+         / 1000000.0 / count(*)) * 1000000 + 0.5) / 1000000 AS avg_quality
+FROM ex
+GROUP BY domain
+"""),
+    Query("repetition", q_repetition, "aged", oracle=f"""
+WITH toks AS (
+  SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents)
+SELECT doc_id,
+  CAST(CASE WHEN len(w) >= 3 THEN len(w) - 2 ELSE 0 END AS INT) AS n_grams,
+  CASE WHEN len(w) >= 3
+    THEN floor((1.0 - CAST(len(list_distinct(
+           list_transform(generate_series(1, len(w) - 2),
+             i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS DOUBLE)
+         / (len(w) - 2)) * 1000000 + 0.5) / 1000000
+    ELSE 0.0 END AS rep_ratio
+FROM toks
+""", note=(
+        "CPU-heavy per-row shingling: explicit repartition(parallelism) "
+        "spreads rows before the transform (a single parquet split "
+        "would otherwise serialize the whole corpus through one task; "
+        "AQE coalesces small-bytes exchanges, so the N is explicit). "
+        "Token split staged before the shingle lambda (2x at sf0.1; "
+        "see decontaminate note)."
+    )),
+    # -- changed: plans changed in round 5, r4 green is stale --
+    Query("profile_docs", q_profile_docs, "changed", oracle=_profile_sql(), note=(
+        "Per-column corpus audit with ZERO Expand (the "
+        "multi-countDistinct shape that multiplies every corpus row "
+        "by n_cols is gone): non-distinct metrics ride ONE wide "
+        "map-side-combined aggregate; exact cardinalities come from "
+        "a stacked (col_name, value) single-countDistinct — Catalyst "
+        "rewrites the lone distinct into two-phase partial-distinct, "
+        "so only unique pairs shuffle; the 5-row result broadcasts "
+        "back. exact_distinct=False drops the second pass entirely "
+        "(approx_count_distinct in the wide agg)."
+    )),
+    # banded-verify twin: full DP + the same floor((1-t)*max_len)
+    # bound the engine's 3-arg levenshtein enforces in-DP
+    Query("lsh_verify", q_lsh_verify, "changed", oracle=f"""
+WITH pairs AS ({_minhash_sql()}),
+d AS (SELECT doc_id, {_NORM} AS norm FROM documents),
+j AS (
+  SELECT p.id_a, p.id_b, p.n_shared_bands,
+    CASE WHEN a.norm IS NULL OR b.norm IS NULL THEN NULL
+         WHEN levenshtein(a.norm, b.norm)
+              <= CAST(floor({_LEV_SLACK}
+                     * greatest(length(a.norm), length(b.norm))) AS INT)
+         THEN levenshtein(a.norm, b.norm) ELSE -1 END AS lev,
+    greatest(length(a.norm), length(b.norm)) AS maxlen
+  FROM pairs p
+  JOIN d a ON p.id_a = a.doc_id
+  JOIN d b ON p.id_b = b.doc_id
+)
+SELECT id_a, id_b, n_shared_bands, lev,
+  CASE WHEN lev < 0 THEN NULL
+       WHEN maxlen > 0
+         THEN {sql_round6('1.0 - CAST(lev AS DOUBLE) / maxlen')}
+       ELSE 1.0 END AS sim6
+FROM j
+""", note=(
+        "Candidates -> verify: O(len^2) Levenshtein runs ONLY on the "
+        "banded, capped LSH candidate pairs. The two doc-text lookups "
+        "are equi-joins where the small pair side broadcasts (AQE), "
+        "so the corpus is scanned once per side and never shuffled."
+    )),
     # overlapping 6-token shingles; within-doc stutter counts toward
     # the >=2 cut (count(*), not count(DISTINCT doc_id)) — mirrors
     # functions.dedup.scrub_repeated_spans exactly
-    "repeated_span_scrub": r"""
+    Query("repeated_span_scrub", q_repeated_span_scrub, "changed", oracle=r"""
 WITH aug AS (
   SELECT doc_id,
          CASE WHEN doc_id % 7 = 0
@@ -2465,50 +2731,37 @@ FROM pos p
 LEFT JOIN cov c ON c.doc_id = p.doc_id AND c.pos = p.pos
 LEFT JOIN nsp n ON n.doc_id = p.doc_id
 GROUP BY p.doc_id
-""",
-    # replays every Bloom hash, shift, and bit_or exactly; 63 bits per
-    # word keeps 1<<bit off the sign bit in both engines
-    "bloom_dedup": r"""
-WITH d AS (
-  SELECT doc_id,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-  FROM documents WHERE text IS NOT NULL
-), corpus AS (
-  SELECT * FROM d WHERE doc_id % 10 <> 0
-), batch AS (
-  SELECT * FROM d WHERE doc_id % 10 = 0
-), cpos AS (
-  -- step forced odd: 2*(h2 % (m/2)) + 1, coprime to the power-of-two m
-  SELECT ((CAST('0x'||substr(md5('bloomA|'||fp),1,15) AS BIGINT) % 8192
-           + i * ((CAST('0x'||substr(md5('bloomB|'||fp),1,15) AS BIGINT)
-                   % 4096) * 2 + 1)) % 8192) AS pos
-  FROM corpus, UNNEST(range(5)) AS u(i)
-), bloom AS (
-  SELECT pos // 63 AS word,
-         bit_or(CAST(1 AS BIGINT) << CAST(pos % 63 AS INT)) AS bits
-  FROM cpos GROUP BY 1
-), bpos AS (
-  SELECT doc_id, fp,
-         ((h1 % 8192 + i * ((h2 % 4096) * 2 + 1)) % 8192) AS pos
-  FROM (SELECT doc_id, fp,
-               CAST('0x'||substr(md5('bloomA|'||fp),1,15) AS BIGINT) AS h1,
-               CAST('0x'||substr(md5('bloomB|'||fp),1,15) AS BIGINT) AS h2
-        FROM batch), UNNEST(range(5)) AS u(i)
-), hits AS (
-  SELECT p.doc_id, p.fp,
-         bool_and(coalesce(
-             (b.bits & (CAST(1 AS BIGINT) << CAST(p.pos % 63 AS INT))) <> 0,
-             FALSE)) AS bloom_hit
-  FROM bpos p LEFT JOIN bloom b ON b.word = p.pos // 63
-  GROUP BY p.doc_id, p.fp
-)
-SELECT h.doc_id, h.bloom_hit, coalesce(t.true_dup, FALSE) AS true_dup
-FROM hits h
-LEFT JOIN (SELECT DISTINCT fp, TRUE AS true_dup FROM corpus) t USING (fp)
-""",
+""", note=(
+        "Exact repeated-substring scrub, 4 exchanges: the corpus is "
+        "deliberately scanned+spread twice (explicit repartition on "
+        "each reference — shingle side and output side — same "
+        "two-scan rationale as boilerplate_scrub: an embarrassingly "
+        "parallel rescan beats materializing the tokenized corpus), "
+        "plus ONE hash-key count exchange (partial-agg combined) and "
+        "ONE per-doc coverage regroup. Shingle hashes are staged in "
+        "their own select (md5 once per shingle); the repeated set "
+        "joins back on the hash (broadcast when Zipf-small); span "
+        "membership tests run inside the staged token array, never a "
+        "join per position. No window anywhere; the corpus never sorts."
+    )),
+    Query("boilerplate_scrub", q_boilerplate_scrub, "changed",
+          oracle=_boilerplate_scrub_sql(),
+          note=(
+              "Segmenting is map-side (split + slice in transform, one "
+              "explode); the corpus is deliberately scanned twice (boiler "
+              "build + flag side) — a second embarrassingly-parallel scan "
+              "beats materializing segmented text; ONE shuffle counts "
+              "distinct docs per segment (within-doc repeats deduped "
+              "map-side via array_distinct, so a plain count suffices); the "
+              "Zipf-small boilerplate set returns as an explicit broadcast "
+              "left join so the corpus-sized side never shuffles for the "
+              "membership test; ONE final shuffle regroups survivors per "
+              "doc, reassembled by array_sort inside the aggregate (no "
+              "window, no skew pivot — seg_idx is unique per doc)."
+          )),
     # decompose-filter-reassemble mirrors functions.text.canonical_url
     # step for step (no group backrefs — RE2 portability)
-    "url_dedup": r"""
+    Query("url_dedup", q_url_dedup, "changed", oracle=r"""
 WITH urls AS (
   SELECT doc_id,
     CASE doc_id % 4
@@ -2554,144 +2807,22 @@ WITH urls AS (
 )
 SELECT canon_url, min(doc_id) AS keeper_doc_id, count(*) AS n_dups
 FROM canon WHERE canon_url IS NOT NULL GROUP BY canon_url
-""",
-    "pit_asof_join": """
-WITH spine AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
--- same-ts feature rows collapse to the highest event_id BEFORE the
--- as-of (DuckDB ASOF has no tie control; the engine's
--- feature_order_col resolves the identical winner)
-fv AS (
-  SELECT user_id, ts, value FROM (
-    SELECT user_id, ts, value,
-      row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
-    FROM events) WHERE rn = 1)
-SELECT s.event_id, s.user_id, s.ts,
-       CASE WHEN f.ts >= s.ts - INTERVAL 1 HOUR THEN f.value END AS last_value
-FROM spine s ASOF LEFT JOIN fv f
-  ON s.user_id = f.user_id AND f.ts <= s.ts
-""",
-    "window_count_1h": f"""
-SELECT event_id, user_id, ts,
-       CAST(count(value) OVER ({_W1H}) AS DOUBLE) AS cnt_1h
-FROM events
-""",
-    "window_multi_24h": f"""
-SELECT event_id, user_id, ts,
-  round(CAST(sum(CAST(value AS DECIMAL(18,2))) OVER ({_W24}) AS DOUBLE), 6) AS sum_24h,
-  floor(CAST(sum(CAST(value AS DECIMAL(18,2))) OVER ({_W24}) AS DOUBLE)
-        / CAST(count(value) OVER ({_W24}) AS DOUBLE) * 1000000 + 0.5)
-    / 1000000 AS avg_24h,
-  CAST(min(CAST(value AS DECIMAL(18,2))) OVER ({_W24}) AS DOUBLE) AS min_24h,
-  CAST(max(CAST(value AS DECIMAL(18,2))) OVER ({_W24}) AS DOUBLE) AS max_24h
-FROM events
-""",
-    "window_distinct_6h": f"""
-SELECT event_id, user_id, ts,
-       CAST(count(DISTINCT event_type) OVER ({_W6H}) AS DOUBLE) AS dcnt_6h
-FROM events
-""",
-    "two_phase_1h_10m": """
-WITH p AS (
-  SELECT user_id, epoch_us(ts) // 600000000 AS bucket,
-         count(value) AS c, sum(CAST(value AS DECIMAL(18,2))) AS s
-  FROM events GROUP BY 1, 2
-)
-SELECT user_id,
-  make_timestamp((bucket + 1) * 600000000) AS ts,
-  CAST(sum(c) OVER w AS DOUBLE) AS cnt_1h,
-  round(CAST(sum(s) OVER w AS DOUBLE), 6) AS sum_1h
-FROM p
-WINDOW w AS (PARTITION BY user_id ORDER BY bucket RANGE BETWEEN 5 PRECEDING AND CURRENT ROW)
-""",
-    "hll_accuracy": """
-WITH r AS (
-  SELECT user_id, epoch_us(ts) // 1800000000 AS bucket, event_type FROM events),
-pairs AS (SELECT DISTINCT user_id, bucket, event_type FROM r),
-ends AS (SELECT DISTINCT user_id, bucket FROM r)
-SELECT e.user_id,
-  make_timestamp((e.bucket + 1) * 1800000000) AS ts,
-  CAST(count(DISTINCT p.event_type) AS DOUBLE) AS dcnt_exact,
-  TRUE AS hll_ok
-FROM ends e JOIN pairs p
-  ON p.user_id = e.user_id AND p.bucket BETWEEN e.bucket - 11 AND e.bucket
-GROUP BY e.user_id, e.bucket
-""",
-    "salted_user_stats": """
-SELECT user_id,
-  CAST(count(value) AS DOUBLE) AS n_events,
-  round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 6) AS sum_value,
-  CAST(min(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS min_value,
-  CAST(max(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS max_value,
-  floor(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-        / count(value) * 1000000 + 0.5) / 1000000 AS avg_value
-FROM events GROUP BY 1
-""",
-    "lag_lead": """
-SELECT event_id, user_id, ts,
-  lag(value) OVER w AS prev_value,
-  lead(value) OVER w AS next_value,
-  lag(event_type) OVER w AS prev_type
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-""",
-    "keep_previous_age_guard": """
-SELECT event_id, user_id, ts,
-  CASE WHEN epoch_us(lag(ts) OVER w) >= epoch_us(ts) - 3600000000
-       THEN lag(value) OVER w END AS prev_value_1h
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-""",
-    "sessionize_30m": """
-WITH g AS (
-  SELECT event_id, user_id, ts,
-    CASE WHEN lag(ts) OVER w IS NULL THEN 0
-         WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1
-         ELSE 0 END AS brk
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), s AS (
-  SELECT event_id, user_id, ts,
-    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT) AS session_idx
-  FROM g
-)
-SELECT event_id, user_id, ts, session_idx,
-       CAST(user_id AS VARCHAR) || '#' || CAST(session_idx AS VARCHAR) AS session_id
-FROM s
-""",
-    "session_stats_30m": """
-WITH g AS (
-  SELECT user_id, ts,
-    CASE WHEN lag(ts) OVER w IS NULL THEN 0
-         WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1
-         ELSE 0 END AS brk
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), s AS (
-  SELECT user_id, ts,
-    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT) AS session_idx
-  FROM g
-)
-SELECT user_id, session_idx, min(ts) AS session_start, max(ts) AS session_end,
-       count(*) AS n_events
-FROM s GROUP BY 1, 2
-""",
-    "valid_till_1h": """
-SELECT event_id, user_id, ts,
-  least(coalesce(lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-                 ts + INTERVAL 1 HOUR),
-        ts + INTERVAL 1 HOUR) AS valid_till
-FROM events
-""",
-    "latest_per_key": """
-SELECT user_id, event_id, ts, value FROM (
-  SELECT user_id, event_id, ts, value,
-    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
-) WHERE rn = 1
-""",
-    "backfill_wide": """
+""", note=(
+        "URL canonicalization is map-only (JVM regex + query-param "
+        "list filter); the dedup is ONE count aggregate on the "
+        "canonical key with min-id keeper. At 100 TB the canonical "
+        "key is near-unique so the exchange carries ~1 row per URL "
+        "after map-side combine."
+    )),
+    Query("ann_ivf_kmeans", q_ann_ivf_kmeans, "changed", oracle=_ann_ivf_kmeans_sql(), note=(
+        "Lloyd iterations: assignment is a map-only scan against "
+        "centroid literals (no shuffle), per-dim means via posexplode "
+        "+ one narrow aggregate; per-iteration driver collect is k "
+        "rows. Probe/scan is the same broadcast equi-join as ann_ivf."
+    )),
+    # store read ≡ recompute: the SAME SQL as backfill_wide is the
+    # oracle for the materialize→store→as-of path
+    Query("store_read_pit", q_store_read_pit, "changed", oracle="""
 WITH spine AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
 last_click AS (SELECT user_id, ts, value FROM events WHERE event_type = 'click'),
 spend AS (
@@ -2714,8 +2845,96 @@ FROM spine s
 ASOF LEFT JOIN last_click lc ON s.user_id = lc.user_id AND lc.ts <= s.ts
 ASOF LEFT JOIN spend sp ON s.user_id = sp.user_id AND sp.ts <= s.ts
 ASOF LEFT JOIN cnt c ON s.user_id = c.user_id AND c.ts <= s.ts
-""",
-    "api_backfill": """
+""", note=(
+        "Production read: per-fqn partition-PRUNED scans of the "
+        "materialized store (fqn hive dirs → PartitionFilters), "
+        "union-merged in ONE as-of pass on the encoded key. The write "
+        "half (replay + partitionBy(fqn)) is the same plan the "
+        "backfill sink uses; at 10^12 rows reads touch only the "
+        "requested features' files."
+    )),
+    # replays every Bloom hash, shift, and bit_or exactly; 63 bits per
+    # word keeps 1<<bit off the sign bit in both engines
+    Query("bloom_dedup", q_bloom_dedup, "changed", oracle=r"""
+WITH d AS (
+  SELECT doc_id,
+         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+  FROM documents WHERE text IS NOT NULL
+), corpus AS (
+  SELECT * FROM d WHERE doc_id % 10 <> 0
+), batch AS (
+  SELECT * FROM d WHERE doc_id % 10 = 0
+), cpos AS (
+  -- step forced odd: 2*(h2 % (m/2)) + 1, coprime to the power-of-two m
+  SELECT ((CAST('0x'||substr(md5('bloomA|'||fp),1,15) AS BIGINT) % 8192
+           + i * ((CAST('0x'||substr(md5('bloomB|'||fp),1,15) AS BIGINT)
+                   % 4096) * 2 + 1)) % 8192) AS pos
+  FROM corpus, UNNEST(range(5)) AS u(i)
+), bloom AS (
+  SELECT pos // 63 AS word,
+         bit_or(CAST(1 AS BIGINT) << CAST(pos % 63 AS INT)) AS bits
+  FROM cpos GROUP BY 1
+), bpos AS (
+  SELECT doc_id, fp,
+         ((h1 % 8192 + i * ((h2 % 4096) * 2 + 1)) % 8192) AS pos
+  FROM (SELECT doc_id, fp,
+               CAST('0x'||substr(md5('bloomA|'||fp),1,15) AS BIGINT) AS h1,
+               CAST('0x'||substr(md5('bloomB|'||fp),1,15) AS BIGINT) AS h2
+        FROM batch), UNNEST(range(5)) AS u(i)
+), hits AS (
+  SELECT p.doc_id, p.fp,
+         bool_and(coalesce(
+             (b.bits & (CAST(1 AS BIGINT) << CAST(p.pos % 63 AS INT))) <> 0,
+             FALSE)) AS bloom_hit
+  FROM bpos p LEFT JOIN bloom b ON b.word = p.pos // 63
+  GROUP BY p.doc_id, p.fp
+)
+SELECT h.doc_id, h.bloom_hit, coalesce(t.true_dup, FALSE) AS true_dup
+FROM hits h
+LEFT JOIN (SELECT DISTINCT fp, TRUE AS true_dup FROM corpus) t USING (fp)
+""", note=(
+        "Bloom build: k positions explode into ONE bit_or exchange "
+        "that map-side combines to <= m/63 occupied words; the "
+        "finished filter broadcasts, so the batch probe is map-only "
+        "(explode + broadcast-left join + bool_and regroup on the "
+        "batch key). The ground-truth join is a broadcast of the "
+        "distinct corpus fingerprints — at real scale the truth "
+        "column is dropped and ONLY the sketch path runs; it exists "
+        "here so the oracle can see the no-false-negative guarantee."
+    )),
+    # -- flagship: backfill family, always in-window --
+    Query("backfill_wide", q_backfill_wide, "flagship", oracle="""
+WITH spine AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+last_click AS (SELECT user_id, ts, value FROM events WHERE event_type = 'click'),
+spend AS (
+  SELECT user_id, ts,
+    round(CAST(sum(CAST(value AS DECIMAL(18,2))) OVER
+      (PARTITION BY user_id ORDER BY epoch_us(ts)
+       RANGE BETWEEN 86399999999 PRECEDING AND CURRENT ROW) AS DOUBLE), 6) AS spend_24h_sum
+  FROM events WHERE event_type = 'purchase'),
+cnt AS (
+  SELECT user_id, ts,
+    CAST(count(value) OVER
+      (PARTITION BY user_id ORDER BY epoch_us(ts)
+       RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW) AS DOUBLE) AS events_1h_count
+  FROM events)
+SELECT s.event_id, s.user_id, s.ts,
+  CASE WHEN lc.ts >= s.ts - INTERVAL 2 HOUR THEN lc.value END AS last_click,
+  CASE WHEN sp.ts >= s.ts - INTERVAL 24 HOUR THEN sp.spend_24h_sum END AS spend_24h_sum,
+  CASE WHEN c.ts >= s.ts - INTERVAL 1 HOUR THEN c.events_1h_count END AS events_1h_count
+FROM spine s
+ASOF LEFT JOIN last_click lc ON s.user_id = lc.user_id AND lc.ts <= s.ts
+ASOF LEFT JOIN spend sp ON s.user_id = sp.user_id AND sp.ts <= s.ts
+ASOF LEFT JOIN cnt c ON s.user_id = c.user_id AND c.ts <= s.ts
+""", note=(
+        "Fused single-pass PIT plan: every per-row expr is projected "
+        "BEFORE the exchange (the shuffle carries keys + ts + small "
+        "doubles, never `text`/`props`), then ONE hash shuffle + one "
+        "in-partition sort serve every window spec (consecutive "
+        "WindowExecs reuse the child ordering). At 10^12 turns this "
+        "is shuffle-bound on the narrow projection only."
+    )),
+    Query("api_backfill", q_api_backfill, "flagship", oracle="""
 WITH spine AS (
   SELECT user_id, ts, CAST(event_id AS BIGINT) AS purchase_id
   FROM events WHERE event_type = 'purchase'),
@@ -2747,34 +2966,33 @@ FROM (
   ASOF LEFT JOIN clicks lc ON s.user_id = lc.user_id AND lc.ts <= s.ts
   ASOF LEFT JOIN ccnt c ON s.user_id = c.user_id AND c.ts <= s.ts
   ASOF LEFT JOIN mx m ON s.user_id = m.user_id AND m.ts <= s.ts)
-""",
-    # store read ≡ recompute: the SAME SQL as backfill_wide is the
-    # oracle for the materialize→store→as-of path
-    "store_read_pit": """
-WITH spine AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-last_click AS (SELECT user_id, ts, value FROM events WHERE event_type = 'click'),
-spend AS (
-  SELECT user_id, ts,
-    round(CAST(sum(CAST(value AS DECIMAL(18,2))) OVER
-      (PARTITION BY user_id ORDER BY epoch_us(ts)
-       RANGE BETWEEN 86399999999 PRECEDING AND CURRENT ROW) AS DOUBLE), 6) AS spend_24h_sum
-  FROM events WHERE event_type = 'purchase'),
-cnt AS (
-  SELECT user_id, ts,
-    CAST(count(value) OVER
-      (PARTITION BY user_id ORDER BY epoch_us(ts)
-       RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW) AS DOUBLE) AS events_1h_count
-  FROM events)
+""", note=(
+        "Same fused plan as backfill_wide, but the feature programs "
+        "were COMPILED from Python handlers (AST -> Column). The "
+        "compiler's nullability flag routes partial handlers through "
+        "the publish/forward-fill path; plan shape is unchanged."
+    )),
+    Query("kp_filtered", q_kp_filtered, "flagship", oracle="""
+WITH spine AS (
+  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+clicks AS (
+  SELECT user_id, ts, value,
+    lag(ts) OVER w AS pts, lag(value) OVER w AS pv
+  FROM events WHERE event_type = 'click'
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts))
 SELECT s.event_id, s.user_id, s.ts,
-  CASE WHEN lc.ts >= s.ts - INTERVAL 2 HOUR THEN lc.value END AS last_click,
-  CASE WHEN sp.ts >= s.ts - INTERVAL 24 HOUR THEN sp.spend_24h_sum END AS spend_24h_sum,
-  CASE WHEN c.ts >= s.ts - INTERVAL 1 HOUR THEN c.events_1h_count END AS events_1h_count
+  CASE WHEN c.ts >= s.ts - INTERVAL 2 HOUR THEN c.value END AS last_click,
+  CASE WHEN c.pts >= c.ts - INTERVAL 2 HOUR THEN c.pv END AS prev_click_2h
 FROM spine s
-ASOF LEFT JOIN last_click lc ON s.user_id = lc.user_id AND lc.ts <= s.ts
-ASOF LEFT JOIN spend sp ON s.user_id = sp.user_id AND sp.ts <= s.ts
-ASOF LEFT JOIN cnt c ON s.user_id = c.user_id AND c.ts <= s.ts
-""",
-    "online_serve": """
+ASOF LEFT JOIN clicks c ON s.user_id = c.user_id AND c.ts <= s.ts
+""", note=(
+        "Filtered keep_previous FUSED: lag IGNORE NULLS walks update "
+        "rows with a per-feature updates-first tie order (one exchange, "
+        "no Union; the tie-ordered lags add one Window pass below the "
+        "RANGE fill) — versions count updates incl. same-ts ones, the "
+        "age guard anchors at the latest update's ts."
+    )),
+    Query("online_serve", q_online_serve, "flagship", oracle="""
 WITH fv AS (
   SELECT CAST(user_id AS VARCHAR) AS keys, ts, value,
     CAST(event_id % 2 AS INT) AS gen
@@ -2789,22 +3007,13 @@ SELECT l.keys AS user_id, l.ts AS last_ts,
   CASE WHEN epoch_us(m.as_of) - epoch_us(l.ts) <= 3600000000 THEN l.value END
     AS last_value
 FROM latest l, mx m WHERE rn = 1
-""",
-    "kp_filtered": """
-WITH spine AS (
-  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-clicks AS (
-  SELECT user_id, ts, value,
-    lag(ts) OVER w AS pts, lag(value) OVER w AS pv
-  FROM events WHERE event_type = 'click'
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts))
-SELECT s.event_id, s.user_id, s.ts,
-  CASE WHEN c.ts >= s.ts - INTERVAL 2 HOUR THEN c.value END AS last_click,
-  CASE WHEN c.pts >= c.ts - INTERVAL 2 HOUR THEN c.pv END AS prev_click_2h
-FROM spine s
-ASOF LEFT JOIN clicks c ON s.user_id = c.user_id AND c.ts <= s.ts
-""",
-    "hetero_keys": f"""
+""", note=(
+        "Log-structured online read: fqn partition prune + ONE hash "
+        "shuffle for the newest-per-(fqn, keys) row_number — "
+        "deterministic (ts, value)-desc tie rule; the staleness cutoff "
+        "is a scalar comparison against the broadcast as_of."
+    )),
+    Query("hetero_keys", q_hetero_keys, "flagship", oracle=f"""
 WITH ucnt AS (
   SELECT user_id, ts,
     CAST(count(value) OVER ({_W1H}) AS DOUBLE) AS user_cnt_1h
@@ -2823,75 +3032,225 @@ SELECT s.event_id, s.user_id, s.event_type, s.ts,
 FROM events s
 ASOF LEFT JOIN ucnt u ON s.user_id = u.user_id AND u.ts <= s.ts
 ASOF LEFT JOIN tavg t ON s.event_type = t.event_type AND t.ts <= s.ts
-""",
-    "dedup_exact": f"""
-SELECT md5({_NORM}) AS fp, min(doc_id) AS rep_id, count(*) AS n_dups
-FROM documents GROUP BY 1
-""",
-    "text_stats": f"""
+""", note=(
+        "Two key families = two as-of passes. The foreign family runs "
+        "against the DISTINCT (event_type, ts) sub-spine and joins "
+        "back; AQE broadcasts the (small) family result. Each family "
+        "adds one hash-shuffle chain keyed by ITS entity, so skew in "
+        "one family never blocks the other."
+    )),
+    # -- once: checked once (first green row = r4) --
+    Query("knn_cosine", q_knn_cosine, "once", oracle="""
+WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
+scored AS (
+  SELECT q.query_id, c.vec_id AS neighbor_id,
+    floor((
+      list_sum(list_transform(list_zip(q.qv, c.embedding),
+               x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      / (sqrt(list_sum(list_transform(q.qv, v -> CAST(v AS DOUBLE)*CAST(v AS DOUBLE))))
+         * sqrt(list_sum(list_transform(c.embedding, v -> CAST(v AS DOUBLE)*CAST(v AS DOUBLE))))))
+      * 1000000 + 0.5) / 1000000 AS cos_sim
+  FROM embeddings c, q WHERE c.vec_id != q.query_id
+)
+SELECT query_id, neighbor_id, cos_sim,
+  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
+FROM scored
+QUALIFY rank <= 3
+"""),
+    Query("embedding_neardup", q_embedding_neardup, "once", oracle=_embedding_neardup_sql()),
+    Query("semantic_dedup", q_semantic_dedup, "once", oracle=_semantic_dedup_sql(), note=(
+        "Same keep-representatives tail as fuzzy_dedup, fed by "
+        "embedding-LSH cosine pairs (equi-join on hyperplane bucket, "
+        "never all-pairs; n_planes auto-sizing keeps mean bucket "
+        "bounded at any corpus size)."
+    )),
+    Query("ann_lsh", q_ann_lsh, "once", oracle=_ann_lsh_sql()),
+    Query("ann_ivf", q_ann_ivf, "once", oracle=_ann_ivf_sql()),
+    Query("split_assign", q_split_assign, "once", oracle=f"""
 SELECT doc_id,
-  CASE WHEN length(trim(text)) = 0 THEN 0
-       ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
-  length(text) AS n_chars_computed,
-  floor((CASE WHEN length(text)>0 THEN CAST(length(regexp_replace(text,'[^A-Za-z]','','g')) AS DOUBLE)/length(text) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS alpha_ratio,
-  floor((CASE WHEN length(text)>0 THEN CAST(length(text)-length(regexp_replace(text,'[.,!?;:]','','g')) AS DOUBLE)/length(text) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS punct_ratio,
-  floor((CASE WHEN length(text)>0 THEN CAST(length(text)-length(regexp_replace(text,'[A-Z]','','g')) AS DOUBLE)/length(text) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS upper_ratio,
-  floor((CASE WHEN (CASE WHEN length(trim(text)) = 0 THEN 0
-       ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) > 0
-    THEN CAST({_lang_hits_sql('en')} AS DOUBLE)
-         / (CASE WHEN length(trim(text)) = 0 THEN 0
-            ELSE len(regexp_split_to_array(trim(text), '\\s+')) END)
-    ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS stopword_ratio,
-  {_quality_sql()} AS quality,
-  md5({_NORM}) AS fingerprint
+  CASE WHEN {_SPLIT_HASH} < 800000 THEN 'train'
+       WHEN {_SPLIT_HASH} < 900000 THEN 'val'
+       ELSE 'test' END AS split
 FROM documents
-""",
-    "decontaminate": f"""
-WITH norm AS (SELECT doc_id, {_NORM} AS nt FROM documents),
-toks AS (SELECT doc_id, nt, string_split(nt, ' ') AS w FROM norm),
-grams AS (
-  SELECT doc_id, CAST('0x' || substr(md5(g), 1, 15) AS BIGINT) AS gh
-  FROM (
-    SELECT doc_id, unnest(
-      CASE WHEN len(w) >= 8
-        THEN list_distinct(list_transform(generate_series(1, len(w) - 7),
-             i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7]))
-        ELSE [nt] END) AS g
-    FROM toks)),
-pg AS (SELECT doc_id AS probe_id, gh FROM grams WHERE doc_id % 10 = 0),
-pn AS (SELECT probe_id, count(*) AS probe_ngrams FROM pg GROUP BY 1),
-cg AS (SELECT doc_id, gh FROM grams WHERE doc_id % 10 != 0),
-hits AS (
-  SELECT c.doc_id, p.probe_id, count(*) AS shared_ngrams
-  FROM cg c JOIN pg p USING (gh) GROUP BY 1, 2)
-SELECT h.doc_id, h.probe_id, h.shared_ngrams, n.probe_ngrams,
-  floor((CAST(h.shared_ngrams AS DOUBLE) / CAST(n.probe_ngrams AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS contamination
-FROM hits h JOIN pn n USING (probe_id)
-WHERE floor((CAST(h.shared_ngrams AS DOUBLE) / CAST(n.probe_ngrams AS DOUBLE)) * 1000000 + 0.5) / 1000000 >= 0.5
-""",
-    "clean_corpus": f"""
-WITH p AS (SELECT doc_id, text FROM documents),
-s AS (
+"""),
+    Query("embedding_quantize", q_embedding_quantize, "once", oracle=f"""
+WITH v AS (SELECT vec_id,
+    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings),
+m AS (SELECT vec_id, v,
+    list_max(list_transform(v, x -> abs(x))) AS maxabs FROM v),
+q AS (SELECT vec_id, v, maxabs,
+    CASE WHEN maxabs > 0
+      THEN list_transform(v,
+           x -> CAST(floor(x * 127.0 / maxabs + 0.5) AS INT))
+      ELSE list_transform(v, x -> 0) END AS q
+  FROM m)
+SELECT vec_id,
+  array_to_string(q, ',') AS q_str,
+  {sql_round6('maxabs / 127.0')} AS scale6,
+  CAST(list_sum(list_transform(q, x -> CAST(x AS BIGINT))) AS BIGINT) AS q_sum,
+  CASE WHEN maxabs > 0
+    THEN {sql_round6("list_sum(list_transform(list_zip(v, q), t -> pow(t[1] - CAST(t[2] AS DOUBLE) * maxabs / 127.0, 2.0))) / 64.0")}
+    ELSE 0.0 END AS mse6
+FROM q
+""", note=(
+        "Map-only: per-vector int8 quantization + reconstruction MSE "
+        "as Catalyst higher-order functions (transform/zip_with/"
+        "aggregate), zero shuffle at any scale; maxabs is staged in "
+        "its own projection so it is not re-evaluated per element. "
+        "split_assign / embedding_project share this shape (pure "
+        "map-side hash / literal-matrix projections)."
+    )),
+    Query("embedding_project", q_embedding_project, "once", oracle=_project_sql()),
+    Query("conv_rollup", q_conv_rollup, "once", oracle=_conv_rollup_sql(), note=(
+        "groupBy().pivot() with an EXPLICIT pivot-value list — no "
+        "distinct pre-scan job (at 10^12 turns the role/tool "
+        "vocabulary is config, not discovered). JSON prop extraction "
+        "is get_json_object in the scan projection; the pivot is ONE "
+        "hash shuffle with map-side partials per (key x type) cell."
+    )),
+    Query("unigram_logprob", q_unigram_logprob, "once", oracle=f"""
+WITH toks AS (
   SELECT doc_id,
-    {_TOKENS} AS n_tokens,
-    {_quality_sql()} AS quality,
-    md5({_NORM}) AS fp,
-    {_lang_hits_sql('en')} AS h_en,
-    {_lang_hits_sql('de')} AS h_de,
-    {_lang_hits_sql('fr')} AS h_fr,
-    {_lang_hits_sql('es')} AS h_es
-  FROM p),
-f AS (
-  SELECT doc_id, n_tokens, quality, fp
-  FROM s
-  WHERE quality >= 0.5 AND n_tokens >= 5
-    AND h_en > 0 AND h_en >= h_de AND h_en >= h_fr AND h_en >= h_es)
-SELECT doc_id, n_tokens, quality, fp,
-  count(*) OVER (PARTITION BY fp) AS n_dups
-FROM f
-QUALIFY row_number() OVER (PARTITION BY fp ORDER BY doc_id) = 1
-""",
-    "pack_sequences": f"""
+    unnest(regexp_extract_all(lower(text), '{_TOKEN_RE}')) AS token
+  FROM documents),
+counts AS (SELECT token, count(*) AS n_t FROM toks GROUP BY 1),
+tot AS (SELECT sum(n_t) AS n_total FROM counts),
+scored AS (SELECT token,
+    CAST(floor(-log2(CAST(n_t AS DOUBLE) / CAST(n_total AS DOUBLE))
+         * 1000000 + 0.5) AS BIGINT) AS qbits
+  FROM counts, tot)
+SELECT t.doc_id, count(*) AS n_tokens,
+  {sql_round6('CAST(sum(s.qbits) AS DOUBLE) / 1000000 / count(*)')} AS logprob6
+FROM toks t JOIN scored s ON t.token = s.token
+GROUP BY 1
+""", note=(
+        "Corpus-self-trained unigram LM filter: tokenize map-side, "
+        "ONE shuffle counts the vocabulary, the corpus total comes "
+        "back via a broadcast of the 1-row aggregate (the only "
+        "single-partition exchange — it receives one pre-reduced "
+        "partial per partition, never rows), token->surprisal join "
+        "(AQE broadcasts the Zipf-bounded vocab when it fits), ONE "
+        "shuffle for the per-doc sum. Surprisal is integer-quantized "
+        "pre-sum, so the aggregate is order/partitioning-independent."
+    )),
+    Query("bm25_search", q_bm25_search, "once", oracle=_bm25_sql(_BM25_TERMS, k=10), note=(
+        "df/idf stats in ONE token shuffle (map-side combined), query "
+        "terms + doc-frequency table broadcast back; per-doc scoring "
+        "is a map-side join + aggregate, and top-k is "
+        "TakeOrderedAndProject (never a global sort)."
+    )),
+    Query("revenue_by_nation", q_revenue_by_nation, "once", oracle="""
+SELECT n.n_name,
+  round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))
+        * (CAST(1 AS DECIMAL(18,2)) - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE), 6) AS revenue,
+  count(*) AS n_items
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+  AND o.o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
+  AND o.o_orderdate < TIMESTAMP '1996-01-01 00:00:00'
+JOIN customer c ON o.o_custkey = c.c_custkey
+JOIN nation n ON c.c_nationkey = n.n_nationkey
+GROUP BY 1
+"""),
+    Query("topk_orders_per_cust", q_topk_orders_per_cust, "once", oracle="""
+SELECT o_custkey, o_orderkey, o_totalprice,
+  CAST(row_number() OVER (PARTITION BY o_custkey
+       ORDER BY o_totalprice DESC, o_orderkey) AS INT) AS rk
+FROM orders
+QUALIFY rk <= 3
+"""),
+    # ---------------- window boundary: position 50 ----------------
+    # shipping_priority evicted by rest_enrich (r5 late addition). Its
+    # only driver-green row is r4 (aged 1 round at eviction) — NOT the
+    # "green in r2 AND r3" tail criterion; it leaves the window anyway
+    # because a never-checked query outranks a once-checked one when
+    # the window is full. Eviction order when forced: oldest-green
+    # first among once-checked rows, never a "new" row.
+    Query("shipping_priority", q_shipping_priority, "once", oracle="""
+SELECT l_orderkey, o_orderdate,
+  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+        * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
+        AS DOUBLE), 6) AS revenue
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+WHERE c_mktsegment = 'BUILDING'
+  AND o_orderdate < TIMESTAMP '1997-01-01'
+  AND l_shipdate > TIMESTAMP '1997-01-01'
+GROUP BY 1, 2
+ORDER BY revenue DESC, l_orderkey
+LIMIT 10
+"""),
+    # -- tail: long-stable, driver-green in r4 (and most in r2/r3), --
+    # -- pinned by exact-mode check_oracles + pytest every round    --
+    Query("pricing_summary", q_pricing_summary, "tail", oracle="""
+SELECT l_returnflag, l_linestatus,
+  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+        * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
+  count(*) AS count_order
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+GROUP BY l_returnflag, l_linestatus
+"""),
+    Query("cust_without_orders", q_cust_without_orders, "tail", oracle="""
+SELECT c_custkey, c_name, c_nationkey
+FROM customer c
+WHERE NOT EXISTS (SELECT 1 FROM orders o
+                  WHERE o.o_custkey = c.c_custkey
+                    AND o.o_totalprice > 450000)
+"""),
+    Query("hll_accuracy", q_hll_accuracy, "tail", oracle="""
+WITH r AS (
+  SELECT user_id, epoch_us(ts) // 1800000000 AS bucket, event_type FROM events),
+pairs AS (SELECT DISTINCT user_id, bucket, event_type FROM r),
+ends AS (SELECT DISTINCT user_id, bucket FROM r)
+SELECT e.user_id,
+  make_timestamp((e.bucket + 1) * 1800000000) AS ts,
+  CAST(count(DISTINCT p.event_type) AS DOUBLE) AS dcnt_exact,
+  TRUE AS hll_ok
+FROM ends e JOIN pairs p
+  ON p.user_id = e.user_id AND p.bucket BETWEEN e.bucket - 11 AND e.bucket
+GROUP BY e.user_id, e.bucket
+"""),
+    # rows-only by design: accuracy is gated by the companion
+    # hll_accuracy record
+    Query("window_approx_distinct_6h", q_window_approx_distinct_6h, "tail", oracle=None),
+    Query("cms_heavy_hitters", q_cms_heavy_hitters, "tail", oracle=f"""
+WITH toks AS (
+  SELECT unnest(regexp_extract_all(lower(text), '{_TOKEN_RE}')) AS token
+  FROM documents),
+counts AS (SELECT token, count(*) AS exact_n FROM toks GROUP BY 1),
+rws AS (SELECT unnest([0, 1, 2, 3]) AS row),
+hashes AS (
+  SELECT c.token, c.exact_n, r.row,
+    CAST('0x' || substr(md5('cms' || r.row || '|' || c.token), 1, 15)
+         AS BIGINT) % 512 AS col
+  FROM counts c, rws r),
+cells AS (
+  SELECT row, col, CAST(SUM(exact_n) AS BIGINT) AS cell
+  FROM hashes GROUP BY row, col),
+top AS (
+  SELECT token, exact_n FROM counts
+  QUALIFY row_number() OVER (ORDER BY exact_n DESC, token) <= 20)
+SELECT t.token, t.exact_n,
+  CAST(MIN(cl.cell) AS BIGINT) AS est_n,
+  CAST(MIN(cl.cell) AS BIGINT) >= t.exact_n AS cms_ok
+FROM top t
+JOIN hashes h ON h.token = t.token
+JOIN cells cl ON cl.row = h.row AND cl.col = h.col
+GROUP BY t.token, t.exact_n
+""", note=(
+        "CMS build: the d-cell explode collapses via map-side combine "
+        "to <= d*width partial rows per partition before the ONE "
+        "aggregate shuffle; the finished sketch broadcasts for the "
+        "estimate join (no corpus re-shuffle). Exact counts for the "
+        "comparison column are the only vocabulary-wide shuffle — at "
+        "100 TB you carry the sketch INSTEAD of that groupBy."
+    )),
+    Query("pack_sequences", q_pack_sequences, "tail", oracle=f"""
 WITH toks AS (
   SELECT doc_id,
     CAST({_TOKENS} AS BIGINT) AS n_tokens,
@@ -2914,90 +3273,36 @@ SELECT doc_id, seq_id,
   least(off + n_tokens, (seq_id + 1) * 512)
     - greatest(off, seq_id * 512) AS len
 FROM spans
-""",
-    "doc_chunks": """
-WITH n AS (
-  SELECT doc_id, coalesce(text, '') AS text,
-    greatest(1, CAST(ceil((length(coalesce(text, '')) - 100) / 400.0) AS INT))
-      AS n_chunks
-  FROM documents),
-ex AS (
-  SELECT doc_id, text, n_chunks,
-    unnest(generate_series(1, n_chunks)) AS i
-  FROM n)
-SELECT doc_id, CAST(i - 1 AS INT) AS chunk_idx,
-  substr(text, CAST((i - 1) * 400 + 1 AS INT), 500) AS chunk, n_chunks
-FROM ex
-""",
-    "lang_id": f"""
-WITH p AS (SELECT doc_id, text FROM documents),
-h AS (SELECT doc_id,
-  {_lang_hits_sql('en')} AS h_en,
-  {_lang_hits_sql('de')} AS h_de,
-  {_lang_hits_sql('fr')} AS h_fr,
-  {_lang_hits_sql('es')} AS h_es
-FROM p)
-SELECT doc_id,
-  CASE
-    WHEN h_en > 0 AND h_en >= h_de AND h_en >= h_fr AND h_en >= h_es THEN 'en'
-    WHEN h_de > 0 AND h_de >= h_fr AND h_de >= h_es AND h_de >= h_en THEN 'de'
-    WHEN h_fr > 0 AND h_fr >= h_es AND h_fr >= h_en AND h_fr >= h_de THEN 'fr'
-    WHEN h_es > 0 AND h_es >= h_en AND h_es >= h_de AND h_es >= h_fr THEN 'es'
-    ELSE 'und' END AS lang_guess
-FROM h
-""",
-    "pii_scrub": _pii_sql(),
-    "mixture_sample": f"""
-WITH p AS (SELECT doc_id, text FROM documents),
-h AS (SELECT doc_id,
-  {_lang_hits_sql('en')} AS h_en,
-  {_lang_hits_sql('de')} AS h_de,
-  {_lang_hits_sql('fr')} AS h_fr,
-  {_lang_hits_sql('es')} AS h_es
-FROM p),
-l AS (SELECT doc_id,
-  CASE
-    WHEN h_en > 0 AND h_en >= h_de AND h_en >= h_fr AND h_en >= h_es THEN 'en'
-    WHEN h_de > 0 AND h_de >= h_fr AND h_de >= h_es AND h_de >= h_en THEN 'de'
-    WHEN h_fr > 0 AND h_fr >= h_es AND h_fr >= h_en AND h_fr >= h_de THEN 'fr'
-    WHEN h_es > 0 AND h_es >= h_en AND h_es >= h_de AND h_es >= h_fr THEN 'es'
-    ELSE 'und' END AS stratum
-FROM h)
-SELECT doc_id, stratum FROM l
-WHERE {_MIX_HASH} < CASE stratum
-  WHEN 'en' THEN 1000000 WHEN 'es' THEN 750000
-  WHEN 'de' THEN 500000 WHEN 'fr' THEN 250000 ELSE 100000 END
-""",
-    "minhash_lsh": _minhash_sql(),
-    "dup_clusters": _dup_clusters_sql(),
-    "boilerplate_scrub": _boilerplate_scrub_sql(),
-    "fuzzy_dedup": _fuzzy_dedup_sql(),
-    "stream_dedup": (
-        "SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', "
-        "'g'))) AS fp FROM documents"
-    ),
-    "tokenize_corpus": f"""
-WITH arrs AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{_TOKEN_RE}') AS arr
-  FROM documents
-),
-toks AS (
-  SELECT doc_id, i AS pos, arr[i + 1] AS token
-  FROM arrs, UNNEST(range(len(arr))) AS u(i)
-),
-counts AS (SELECT token, count(*) AS n_t FROM toks GROUP BY 1),
-vocab AS (
-  SELECT token, row_number() OVER (ORDER BY n_t DESC, token ASC) AS tok_id
-  FROM counts ORDER BY n_t DESC, token ASC LIMIT 30
-)
-SELECT t.doc_id,
-       count(*) AS n_tokens,
-       string_agg(CAST(coalesce(v.tok_id, 0) AS VARCHAR), ' '
-                  ORDER BY t.pos) AS ids_str
-FROM toks t LEFT JOIN vocab v USING (token)
-GROUP BY t.doc_id
-""",
-    "dedup_incremental": f"""
+""", note=(
+        "Two-level distributed prefix sum: arithmetic block assignment "
+        "from the 60-bit order hash (no repartitionByRange sampling), "
+        "per-block totals map-side combined to <=n_blocks rows, block "
+        "offsets broadcast, ONE corpus shuffle for the within-block "
+        "cumsum. The plan's one no-partition window runs over the "
+        "n_blocks-row AGGREGATE (bounded by construction), never the "
+        "corpus — at 100 B docs with 2^16 blocks it sorts 65k rows."
+    )),
+    Query("budget_sample", q_budget_sample, "tail", oracle=_budget_sample_sql(), note=(
+        "Token-budget mixture fill: the per-source running total is a "
+        "TWO-LEVEL prefix sum (hash key's high bits give order-aligned "
+        "blocks; in-block window covers ~1/n_blocks of a source; block "
+        "offsets ride a window over the tiny source x block frame and "
+        "broadcast back) — a naive running total would push every row "
+        "of the largest source through ONE reducer. BIGINT sums make "
+        "the two-level grouping exactly equal to the oracle's naive "
+        "form."
+    )),
+    Query("fuzzy_dedup", q_fuzzy_dedup, "tail", oracle=_fuzzy_dedup_sql(), note=(
+        "End-to-end dedup: LSH pair generation + CC run on the "
+        "candidate subgraph only (banded, capped buckets; edges "
+        "localCheckpoint'ed once, label propagation batched 2 hops/ "
+        "round — the audited plan shows the final stage because CC's "
+        "driver loop materialized upstream). Corpus-side filter is an "
+        "explicit broadcast LEFT ANTI join against the small "
+        "duplicate-id set + a broadcast left join for cluster sizes: "
+        "the full corpus is ONE scan with map-side probes."
+    )),
+    Query("dedup_incremental", q_dedup_incremental, "tail", oracle=f"""
 WITH {_banded_cte()},
 fp AS (SELECT doc_id, md5(norm) AS fp FROM docs),
 corpus_fp AS (
@@ -3023,8 +3328,51 @@ SELECT n.doc_id,
 FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) n
 LEFT JOIN exact e ON n.doc_id = e.doc_id
 LEFT JOIN near nr ON n.doc_id = nr.doc_id
-""",
-    "domain_cap": f"""
+""", note=(
+        "Incremental (batch-vs-corpus) dedup: the corpus materializes "
+        "aggregated signature stores ONCE (fingerprints; LSH band "
+        "signatures — narrow keys + counts, 1-2% of corpus bytes); "
+        "each new batch's fingerprints and band rows BROADCAST to "
+        "map-side probes of the stores, so the corpus side never "
+        "shuffles per increment; per-doc flags aggregate the batch-"
+        "sized hit rows. For un-broadcastable increments the stores "
+        "persist bucketed by key and the equi-joins co-locate."
+    )),
+    Query("stream_dedup", q_stream_dedup, "tail", bench=False, oracle=(
+        "SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', "
+        "'g'))) AS fp FROM documents"
+    )),
+    Query("tokenize_corpus", q_tokenize_corpus, "tail", oracle=f"""
+WITH arrs AS (
+  SELECT doc_id, regexp_extract_all(lower(text), '{_TOKEN_RE}') AS arr
+  FROM documents
+),
+toks AS (
+  SELECT doc_id, i AS pos, arr[i + 1] AS token
+  FROM arrs, UNNEST(range(len(arr))) AS u(i)
+),
+counts AS (SELECT token, count(*) AS n_t FROM toks GROUP BY 1),
+vocab AS (
+  SELECT token, row_number() OVER (ORDER BY n_t DESC, token ASC) AS tok_id
+  FROM counts ORDER BY n_t DESC, token ASC LIMIT 30
+)
+SELECT t.doc_id,
+       count(*) AS n_tokens,
+       string_agg(CAST(coalesce(v.tok_id, 0) AS VARCHAR), ' '
+                  ORDER BY t.pos) AS ids_str
+FROM toks t LEFT JOIN vocab v USING (token)
+GROUP BY t.doc_id
+""", note=(
+        "Tokenize map-side (JVM regex + posexplode); ONE map-side-"
+        "combined shuffle counts the vocabulary; rank ids come from a "
+        "row_number over the TRUNCATED top-vocab_size frame (bounded "
+        "by construction, never the corpus — the same deliberate "
+        "exception as pack_sequences' block offsets); the token->id "
+        "map broadcasts back for a map-side probe; ONE final shuffle "
+        "regroups ids per doc, position-ordered by array_sort inside "
+        "the aggregate (no window over the corpus)."
+    )),
+    Query("domain_cap", q_domain_cap, "tail", oracle=f"""
 WITH d AS (
   SELECT doc_id,
     CASE WHEN doc_id % 5 = 0 THEN text
@@ -3045,11 +3393,158 @@ SELECT doc_id, q, domain,
 FROM per_doc
 WHERE domain IS NOT NULL AND domain <> ''
 QUALIFY rank_in_group <= 3
-""",
-    "quality_classifier": _quality_classifier_sql(),
-    "budget_sample": _budget_sample_sql(),
-    "simhash_dedup": _simhash_sql(),
-    "containment": f"""
+""", note=(
+        "Salted two-level per-group top-n: pass 1 ranks within "
+        "(domain, salt) so the hottest domain's rows spread over "
+        "n_salts reducers; pass 2 re-ranks the <= n*n_salts survivors "
+        "per domain. A naive single window would put every row of a "
+        "mega-domain through one reducer. Quality is round6-quantized "
+        "so the rank order is engine-portable; the salt is a pure "
+        "function of doc_id (deterministic under re-execution)."
+    )),
+    Query("quality_classifier", q_quality_classifier, "tail",
+          oracle=_quality_classifier_sql(),
+          note=(
+              "Model-based quality filter: gradient-descent training runs "
+              "BEFORE the audited plan (one aggregate per iteration over "
+              "the bounded first-ids sample, integer-quantized partials, "
+              "map-side combined; driver collects 5 scalars/iter); the "
+              "audited scoring plan is MAP-ONLY — trained weights are "
+              "literals, features are JVM regex/arithmetic, no join, no "
+              "shuffle. The algebraic fast sigmoid (no exp) keeps every bit "
+              "engine-portable; the oracle replays the identical iterations."
+          )),
+    Query("hybrid_search", q_hybrid_search, "tail",
+          oracle=_hybrid_sql(_BM25_TERMS, query_vec_id=7, k=10),
+          note=(
+              "Two-stage retrieval: bm25_topk supplies <= k_lex candidates "
+              "(tokens shuffle once, query-term-filtered; top-k via "
+              "TakeOrderedAndProject — that stage's shape is the bm25_search "
+              "row; here it sits behind a localCheckpoint so the candidate "
+              "set materializes exactly once despite two references), then "
+              "stage 2 — the audited plan — touches ONLY candidate rows: "
+              "broadcast-semi restricts the embeddings scan to candidate "
+              "ids, a broadcast LEFT join keeps candidates without an "
+              "embedding row (cosine guard scores them 0.0), the 1-row "
+              "query vector rides a broadcast cross join, and the bm25 max "
+              "/ final rank are windows over the bounded candidate frame."
+          )),
+    Query("decontaminate", q_decontaminate, "tail", oracle=f"""
+WITH norm AS (SELECT doc_id, {_NORM} AS nt FROM documents),
+toks AS (SELECT doc_id, nt, string_split(nt, ' ') AS w FROM norm),
+grams AS (
+  SELECT doc_id, CAST('0x' || substr(md5(g), 1, 15) AS BIGINT) AS gh
+  FROM (
+    SELECT doc_id, unnest(
+      CASE WHEN len(w) >= 8
+        THEN list_distinct(list_transform(generate_series(1, len(w) - 7),
+             i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7]))
+        ELSE [nt] END) AS g
+    FROM toks)),
+pg AS (SELECT doc_id AS probe_id, gh FROM grams WHERE doc_id % 10 = 0),
+pn AS (SELECT probe_id, count(*) AS probe_ngrams FROM pg GROUP BY 1),
+cg AS (SELECT doc_id, gh FROM grams WHERE doc_id % 10 != 0),
+hits AS (
+  SELECT c.doc_id, p.probe_id, count(*) AS shared_ngrams
+  FROM cg c JOIN pg p USING (gh) GROUP BY 1, 2)
+SELECT h.doc_id, h.probe_id, h.shared_ngrams, n.probe_ngrams,
+  floor((CAST(h.shared_ngrams AS DOUBLE) / CAST(n.probe_ngrams AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS contamination
+FROM hits h JOIN pn n USING (probe_id)
+WHERE floor((CAST(h.shared_ngrams AS DOUBLE) / CAST(n.probe_ngrams AS DOUBLE)) * 1000000 + 0.5) / 1000000 >= 0.5
+""", note=(
+        "Probe (benchmark) n-gram hashes BROADCAST to the corpus scan "
+        "— a 100 TB corpus is one scan + map-side hash join; the only "
+        "shuffle is the (doc, probe) collision count over rows that "
+        "actually collided. 60-bit md5 longs keep the broadcast and "
+        "shuffle keys at 8 bytes. The token split is STAGED in its "
+        "own select before the shingle transform — a lambda-embedded "
+        "split(norm(text)) re-evaluates per element (O(positions x "
+        "text_len) per doc); staging it took this query 21.1 s -> "
+        "1.6 s at sf0.1 (13x), bit-identical output."
+    )),
+    Query("clean_corpus", q_clean_corpus, "tail", oracle=f"""
+WITH p AS (SELECT doc_id, text FROM documents),
+s AS (
+  SELECT doc_id,
+    {_TOKENS} AS n_tokens,
+    {_quality_sql()} AS quality,
+    md5({_NORM}) AS fp,
+    {_lang_hits_sql('en')} AS h_en,
+    {_lang_hits_sql('de')} AS h_de,
+    {_lang_hits_sql('fr')} AS h_fr,
+    {_lang_hits_sql('es')} AS h_es
+  FROM p),
+f AS (
+  SELECT doc_id, n_tokens, quality, fp
+  FROM s
+  WHERE quality >= 0.5 AND n_tokens >= 5
+    AND h_en > 0 AND h_en >= h_de AND h_en >= h_fr AND h_en >= h_es)
+SELECT doc_id, n_tokens, quality, fp,
+  count(*) OVER (PARTITION BY fp) AS n_dups
+FROM f
+QUALIFY row_number() OVER (PARTITION BY fp ORDER BY doc_id) = 1
+""", note=(
+        "Composed cleaning pipeline: quality/token/lang filters are "
+        "per-row JVM exprs evaluated in the scan stage, so dropped "
+        "docs never reach the ONE shuffle (the fingerprint dedup "
+        "window). rep + dup-count share a single window pass."
+    )),
+    Query("mixture_sample", q_mixture_sample, "tail", oracle=f"""
+WITH p AS (SELECT doc_id, text FROM documents),
+h AS (SELECT doc_id,
+  {_lang_hits_sql('en')} AS h_en,
+  {_lang_hits_sql('de')} AS h_de,
+  {_lang_hits_sql('fr')} AS h_fr,
+  {_lang_hits_sql('es')} AS h_es
+FROM p),
+l AS (SELECT doc_id,
+  CASE
+    WHEN h_en > 0 AND h_en >= h_de AND h_en >= h_fr AND h_en >= h_es THEN 'en'
+    WHEN h_de > 0 AND h_de >= h_fr AND h_de >= h_es AND h_de >= h_en THEN 'de'
+    WHEN h_fr > 0 AND h_fr >= h_es AND h_fr >= h_en AND h_fr >= h_de THEN 'fr'
+    WHEN h_es > 0 AND h_es >= h_en AND h_es >= h_de AND h_es >= h_fr THEN 'es'
+    ELSE 'und' END AS stratum
+FROM h)
+SELECT doc_id, stratum FROM l
+WHERE {_MIX_HASH} < CASE stratum
+  WHEN 'en' THEN 1000000 WHEN 'es' THEN 750000
+  WHEN 'de' THEN 500000 WHEN 'fr' THEN 250000 ELSE 100000 END
+"""),
+    Query("doc_chunks", q_doc_chunks, "tail", oracle="""
+WITH n AS (
+  SELECT doc_id, coalesce(text, '') AS text,
+    greatest(1, CAST(ceil((length(coalesce(text, '')) - 100) / 400.0) AS INT))
+      AS n_chunks
+  FROM documents),
+ex AS (
+  SELECT doc_id, text, n_chunks,
+    unnest(generate_series(1, n_chunks)) AS i
+  FROM n)
+SELECT doc_id, CAST(i - 1 AS INT) AS chunk_idx,
+  substr(text, CAST((i - 1) * 400 + 1 AS INT), 500) AS chunk, n_chunks
+FROM ex
+""", note=(
+        "Context-window chunking: sequence + substr inside transform, "
+        "explode is the only fan-out — ZERO shuffles, embarrassingly "
+        "parallel at any corpus size."
+    )),
+    Query("pii_scrub", q_pii_scrub, "tail", oracle=_pii_sql()),
+    Query("value_quantiles", q_value_quantiles, "tail", oracle="""
+SELECT event_type,
+  count(*) AS n_events,
+  floor(quantile_cont(value, 0.5)  * 1000000 + 0.5) / 1000000 AS p50,
+  floor(quantile_cont(value, 0.95) * 1000000 + 0.5) / 1000000 AS p95,
+  floor(quantile_cont(value, 0.99) * 1000000 + 0.5) / 1000000 AS p99
+FROM events
+GROUP BY event_type
+""", note=(
+        "Exact grouped percentiles: sort-based percentile aggregate "
+        "with partial aggregation — one shuffle on the group key; "
+        "|event_type| groups bound the final state. For "
+        "high-cardinality groups at 100 TB, swap to approx_percentile "
+        "(t-digest partials) — same plan shape."
+    )),
+    Query("containment", q_containment, "tail", oracle=f"""
 WITH d AS (SELECT doc_id, {_NORM} AS norm FROM documents),
 fp AS (
   SELECT doc_id, unnest(list_distinct(
@@ -3066,91 +3561,8 @@ FROM fp a JOIN kept k ON a.f = k.f
 JOIN fp b ON a.f = b.f AND a.doc_id < b.doc_id
 GROUP BY 1, 2
 HAVING count(*) >= 2
-""",
-    "repetition": f"""
-WITH toks AS (
-  SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents)
-SELECT doc_id,
-  CAST(CASE WHEN len(w) >= 3 THEN len(w) - 2 ELSE 0 END AS INT) AS n_grams,
-  CASE WHEN len(w) >= 3
-    THEN floor((1.0 - CAST(len(list_distinct(
-           list_transform(generate_series(1, len(w) - 2),
-             i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS DOUBLE)
-         / (len(w) - 2)) * 1000000 + 0.5) / 1000000
-    ELSE 0.0 END AS rep_ratio
-FROM toks
-""",
-    "token_freq": f"""
-WITH toks AS (
-  SELECT unnest(regexp_extract_all(lower(text), '{_TOKEN_RE}')) AS token
-  FROM documents),
-counts AS (SELECT token, count(*) AS n FROM toks GROUP BY 1)
-SELECT token, n,
-  CAST(row_number() OVER (ORDER BY n DESC, token) AS INT) AS rank
-FROM counts
-QUALIFY rank <= 20
-""",
-    "domain_stats": f"""
-WITH d AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 5 = 0 THEN text
-      || ' See https://w' || CAST(doc_id % 23 AS VARCHAR)
-      || '.example' || CAST(doc_id % 7 AS VARCHAR)
-      || '.org/p/' || CAST(doc_id AS VARCHAR)
-      || ' and http://cdn' || CAST(doc_id % 11 AS VARCHAR)
-      || '.example.net/x.'
-    ELSE text END AS text
-  FROM documents),
-ex AS (
-  SELECT doc_id, {_quality_sql()} AS q,
-    lower(regexp_extract(u, 'https?://([^/:?#]+)', 1)) AS domain
-  FROM (
-    SELECT doc_id, text,
-      unnest(regexp_extract_all(text, 'https?://[^\\s]+')) AS u
-    FROM d))
-SELECT domain,
-  count(DISTINCT doc_id) AS n_docs,
-  count(*) AS n_urls,
-  floor((CAST(sum(CAST(floor(q * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-         / 1000000.0 / count(*)) * 1000000 + 0.5) / 1000000 AS avg_quality
-FROM ex
-GROUP BY domain
-""",
-    "cms_heavy_hitters": f"""
-WITH toks AS (
-  SELECT unnest(regexp_extract_all(lower(text), '{_TOKEN_RE}')) AS token
-  FROM documents),
-counts AS (SELECT token, count(*) AS exact_n FROM toks GROUP BY 1),
-rws AS (SELECT unnest([0, 1, 2, 3]) AS row),
-hashes AS (
-  SELECT c.token, c.exact_n, r.row,
-    CAST('0x' || substr(md5('cms' || r.row || '|' || c.token), 1, 15)
-         AS BIGINT) % 512 AS col
-  FROM counts c, rws r),
-cells AS (
-  SELECT row, col, CAST(SUM(exact_n) AS BIGINT) AS cell
-  FROM hashes GROUP BY row, col),
-top AS (
-  SELECT token, exact_n FROM counts
-  QUALIFY row_number() OVER (ORDER BY exact_n DESC, token) <= 20)
-SELECT t.token, t.exact_n,
-  CAST(MIN(cl.cell) AS BIGINT) AS est_n,
-  CAST(MIN(cl.cell) AS BIGINT) >= t.exact_n AS cms_ok
-FROM top t
-JOIN hashes h ON h.token = t.token
-JOIN cells cl ON cl.row = h.row AND cl.col = h.col
-GROUP BY t.token, t.exact_n
-""",
-    "value_quantiles": """
-SELECT event_type,
-  count(*) AS n_events,
-  floor(quantile_cont(value, 0.5)  * 1000000 + 0.5) / 1000000 AS p50,
-  floor(quantile_cont(value, 0.95) * 1000000 + 0.5) / 1000000 AS p95,
-  floor(quantile_cont(value, 0.99) * 1000000 + 0.5) / 1000000 AS p99
-FROM events
-GROUP BY event_type
-""",
-    "media_features": """
+"""),
+    Query("media_features", q_media_features, "tail", oracle="""
 SELECT doc_id AS media_id,
   (['image', 'audio', 'video'])[(doc_id % 3) + 1] AS media_type,
   octet_length(encode(text)) AS n_bytes,
@@ -3158,8 +3570,8 @@ SELECT doc_id AS media_id,
   round(CAST(('0x' || substr(md5(substr(text, 1, 64)), 1, 2)) AS INT)
         / 255.0, 6) AS f0
 FROM documents
-""",
-    "media_frames": """
+"""),
+    Query("media_frames", q_media_frames, "tail", oracle="""
 WITH vids AS (
   SELECT doc_id AS media_id, text, length(text) * 10 AS dur
   FROM documents WHERE doc_id % 3 = 2),
@@ -3172,171 +3584,8 @@ SELECT media_id,
   CAST(t AS INT) AS frame_ts_ms,
   md5(substr(text, CAST((t * 7) % greatest(length(text), 1) AS INT) + 1, 16)) AS payload_md5
 FROM f
-""",
-    "embedding_neardup": _embedding_neardup_sql(),
-    "semantic_dedup": _semantic_dedup_sql(),
-    "ann_lsh": _ann_lsh_sql(),
-    "ann_ivf": _ann_ivf_sql(),
-    "ann_ivf_kmeans": _ann_ivf_kmeans_sql(),
-    "ngram_jaccard": f"""
-WITH docs AS (SELECT doc_id, source, {_NORM} AS norm FROM documents),
-toks AS (SELECT doc_id, source, norm, string_split(norm, ' ') AS w FROM docs),
-sh AS (
-  SELECT doc_id, source,
-    CASE WHEN len(w) >= 3
-      THEN list_distinct(list_transform(generate_series(1, len(w) - 2),
-           i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-      ELSE [norm] END AS shingles
-  FROM toks)
-SELECT id_a, id_b, jaccard_sim FROM (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-    floor(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-          / len(list_distinct(list_concat(a.shingles, b.shingles)))
-          * 1000000 + 0.5) / 1000000 AS jaccard_sim
-  FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id < b.doc_id)
-WHERE jaccard_sim >= 0.5
-""",
-    "knn_cosine": """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-scored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-    floor((
-      list_sum(list_transform(list_zip(q.qv, c.embedding),
-               x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform(q.qv, v -> CAST(v AS DOUBLE)*CAST(v AS DOUBLE))))
-         * sqrt(list_sum(list_transform(c.embedding, v -> CAST(v AS DOUBLE)*CAST(v AS DOUBLE))))))
-      * 1000000 + 0.5) / 1000000 AS cos_sim
-  FROM embeddings c, q WHERE c.vec_id != q.query_id
+"""),
 )
-SELECT query_id, neighbor_id, cos_sim,
-  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
-FROM scored
-QUALIFY rank <= 3
-""",
-    "split_assign": f"""
-SELECT doc_id,
-  CASE WHEN {_SPLIT_HASH} < 800000 THEN 'train'
-       WHEN {_SPLIT_HASH} < 900000 THEN 'val'
-       ELSE 'test' END AS split
-FROM documents
-""",
-    "profile_docs": _profile_sql(),
-    # banded-verify twin: full DP + the same floor((1-t)*max_len)
-    # bound the engine's 3-arg levenshtein enforces in-DP
-    "lsh_verify": f"""
-WITH pairs AS ({_minhash_sql()}),
-d AS (SELECT doc_id, {_NORM} AS norm FROM documents),
-j AS (
-  SELECT p.id_a, p.id_b, p.n_shared_bands,
-    CASE WHEN a.norm IS NULL OR b.norm IS NULL THEN NULL
-         WHEN levenshtein(a.norm, b.norm)
-              <= CAST(floor({_LEV_SLACK}
-                     * greatest(length(a.norm), length(b.norm))) AS INT)
-         THEN levenshtein(a.norm, b.norm) ELSE -1 END AS lev,
-    greatest(length(a.norm), length(b.norm)) AS maxlen
-  FROM pairs p
-  JOIN d a ON p.id_a = a.doc_id
-  JOIN d b ON p.id_b = b.doc_id
-)
-SELECT id_a, id_b, n_shared_bands, lev,
-  CASE WHEN lev < 0 THEN NULL
-       WHEN maxlen > 0
-         THEN {sql_round6('1.0 - CAST(lev AS DOUBLE) / maxlen')}
-       ELSE 1.0 END AS sim6
-FROM j
-""",
-    "embedding_quantize": f"""
-WITH v AS (SELECT vec_id,
-    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-m AS (SELECT vec_id, v,
-    list_max(list_transform(v, x -> abs(x))) AS maxabs FROM v),
-q AS (SELECT vec_id, v, maxabs,
-    CASE WHEN maxabs > 0
-      THEN list_transform(v,
-           x -> CAST(floor(x * 127.0 / maxabs + 0.5) AS INT))
-      ELSE list_transform(v, x -> 0) END AS q
-  FROM m)
-SELECT vec_id,
-  array_to_string(q, ',') AS q_str,
-  {sql_round6('maxabs / 127.0')} AS scale6,
-  CAST(list_sum(list_transform(q, x -> CAST(x AS BIGINT))) AS BIGINT) AS q_sum,
-  CASE WHEN maxabs > 0
-    THEN {sql_round6("list_sum(list_transform(list_zip(v, q), t -> pow(t[1] - CAST(t[2] AS DOUBLE) * maxabs / 127.0, 2.0))) / 64.0")}
-    ELSE 0.0 END AS mse6
-FROM q
-""",
-    "embedding_project": _project_sql(),
-    "conv_rollup": _conv_rollup_sql(),
-    "bm25_search": _bm25_sql(_BM25_TERMS, k=10),
-    "hybrid_search": _hybrid_sql(_BM25_TERMS, query_vec_id=7, k=10),
-    "unigram_logprob": f"""
-WITH toks AS (
-  SELECT doc_id,
-    unnest(regexp_extract_all(lower(text), '{_TOKEN_RE}')) AS token
-  FROM documents),
-counts AS (SELECT token, count(*) AS n_t FROM toks GROUP BY 1),
-tot AS (SELECT sum(n_t) AS n_total FROM counts),
-scored AS (SELECT token,
-    CAST(floor(-log2(CAST(n_t AS DOUBLE) / CAST(n_total AS DOUBLE))
-         * 1000000 + 0.5) AS BIGINT) AS qbits
-  FROM counts, tot)
-SELECT t.doc_id, count(*) AS n_tokens,
-  {sql_round6('CAST(sum(s.qbits) AS DOUBLE) / 1000000 / count(*)')} AS logprob6
-FROM toks t JOIN scored s ON t.token = s.token
-GROUP BY 1
-""",
-    "pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-  count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-""",
-    "revenue_by_nation": """
-SELECT n.n_name,
-  round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))
-        * (CAST(1 AS DECIMAL(18,2)) - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE), 6) AS revenue,
-  count(*) AS n_items
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-  AND o.o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-  AND o.o_orderdate < TIMESTAMP '1996-01-01 00:00:00'
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-GROUP BY 1
-""",
-    "topk_orders_per_cust": """
-SELECT o_custkey, o_orderkey, o_totalprice,
-  CAST(row_number() OVER (PARTITION BY o_custkey
-       ORDER BY o_totalprice DESC, o_orderkey) AS INT) AS rk
-FROM orders
-QUALIFY rk <= 3
-""",
-    "shipping_priority": """
-SELECT l_orderkey, o_orderdate,
-  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-        AS DOUBLE), 6) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-  AND l_shipdate > TIMESTAMP '1997-01-01'
-GROUP BY 1, 2
-ORDER BY revenue DESC, l_orderkey
-LIMIT 10
-""",
-    "cust_without_orders": """
-SELECT c_custkey, c_name, c_nationkey
-FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_totalprice > 450000)
-""",
-}
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {q.name: q.build for q in REGISTRY}
+ORACLE_SQL: dict[str, str] = {q.name: q.oracle for q in REGISTRY if q.oracle is not None}

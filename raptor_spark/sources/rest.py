@@ -158,11 +158,11 @@ def _cache_key(url: str, cfg: RestSourceConfig, fetcher) -> tuple:
     # the response depends on the whole request shape, not the URL
     # alone — two configs POSTing different bodies to one URL (or two
     # different injected fetchers) must not serve each other's cached
-    # payloads
-    return (
-        url, cfg.method, cfg.body, cfg.headers,
-        getattr(fetcher, "__qualname__", repr(fetcher)),
-    )
+    # payloads. The key holds the fetcher object, not its name: two
+    # closures from one factory share a __qualname__. The default
+    # _http_fetch unpickles by reference, so every task of a worker
+    # shares its slots.
+    return (url, cfg.method, cfg.body, cfg.headers, fetcher)
 
 
 def _cached_fetch(
@@ -235,6 +235,9 @@ def rest_enrich(
     keys| rows and broadcast-joins back, so the corpus itself is never
     shuffled for enrichment. NULL keys are left un-enriched (no URL to
     build), mirroring the engine's null-key handling elsewhere.
+
+    Raises ``ValueError`` when a response field or ``rest_status`` is
+    already a column of ``df`` (the join would make it ambiguous).
     """
     keys = (
         df.select(*key_cols)
@@ -250,4 +253,12 @@ def rest_enrich(
         F.col("_status").alias("rest_status"),
         F.from_json(F.col("_payload"), schema).alias("_e"),
     ).select(*key_cols, "rest_status", "_e.*")
+    clash = {c.lower() for c in enriched.columns[len(key_cols):]} & {
+        c.lower() for c in df.columns
+    }
+    if clash:
+        raise ValueError(
+            f"rest_enrich: response column(s) {sorted(clash)} already "
+            "exist on the input frame; rename or drop them first"
+        )
     return df.join(F.broadcast(enriched), on=key_cols, how="left")

@@ -228,6 +228,37 @@ def test_cache_key_includes_request_shape():
     assert rest_mod._cached_fetch("http://x/4", get, fetch_b) == (200, "B")
 
 
+def test_cache_key_tells_same_qualname_closures_apart():
+    """Two closures from one factory share a __qualname__; keying on
+    the name let the second serve the first's payload for the TTL."""
+    from raptor_spark.sources import rest as rest_mod
+
+    def const_fetcher(payload):
+        def fetch(url, cfg):
+            return 200, payload
+
+        return fetch
+
+    a, b = const_fetcher("A"), const_fetcher("B")
+    assert a.__qualname__ == b.__qualname__
+    cfg = RestSourceConfig(url="http://x/")
+    assert rest_mod._cached_fetch("http://x/5", cfg, a) == (200, "A")
+    assert rest_mod._cached_fetch("http://x/5", cfg, b) == (200, "B")
+    assert rest_mod._cached_fetch("http://x/5", cfg, a) == (200, "A")
+
+
+@pytest.mark.parametrize("clash", ["plan", "rest_status"])
+def test_rest_enrich_rejects_colliding_columns(spark, clash):
+    spine = spark.createDataFrame([(1, "x")], f"user_id int, {clash} string")
+    with pytest.raises(ValueError, match=clash):
+        rest_enrich(
+            spine,
+            RestSourceConfig(url="file:///nonexistent/{key:user_id}.json"),
+            "plan string, score int",
+            ["user_id"],
+        )
+
+
 def test_missing_file_maps_to_404_not_crash(spark, tmp_path):
     """file:// and http must share error semantics: a missing
     enrichment document is a 404 row with null fields, never a

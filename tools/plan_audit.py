@@ -3,8 +3,9 @@
 
 For each audited query: exchange (shuffle) count, single-partition
 window check, scan pushdown summary, and whole-stage-codegen coverage,
-plus a hand-written note on WHY the plan has that shape and how it
-scales to 10^12 rows. Run from the repo root:
+plus the hand-written note (``Query.note`` in raptor_spark/queries.py)
+on WHY the plan has that shape and how it scales to 10^12 rows. Every
+registry record with a note is audited. Run from the repo root:
 
     python tools/plan_audit.py        # rewrites PLANS.md
 """
@@ -16,329 +17,10 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-from raptor_spark.queries import QUERIES  # noqa: E402
+from raptor_spark.queries import REGISTRY  # noqa: E402
 from raptor_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
-
-NOTES = {
-    "rest_enrich": (
-        "S5 REST enrichment: ONE distinct over the key columns bounds "
-        "every HTTP call (fetch fan-out = |distinct keys|, never per "
-        "spine row); the |keys|-row fetched frame broadcast-joins back, "
-        "so the spine is never shuffled for enrichment. The only "
-        "Python is the Arrow-batched fetch loop itself."
-    ),
-    "backfill_wide": (
-        "Fused single-pass PIT plan: every per-row expr is projected "
-        "BEFORE the exchange (the shuffle carries keys + ts + small "
-        "doubles, never `text`/`props`), then ONE hash shuffle + one "
-        "in-partition sort serve every window spec (consecutive "
-        "WindowExecs reuse the child ordering). At 10^12 turns this "
-        "is shuffle-bound on the narrow projection only."
-    ),
-    "api_backfill": (
-        "Same fused plan as backfill_wide, but the feature programs "
-        "were COMPILED from Python handlers (AST -> Column). The "
-        "compiler's nullability flag routes partial handlers through "
-        "the publish/forward-fill path; plan shape is unchanged."
-    ),
-    "hetero_keys": (
-        "Two key families = two as-of passes. The foreign family runs "
-        "against the DISTINCT (event_type, ts) sub-spine and joins "
-        "back; AQE broadcasts the (small) family result. Each family "
-        "adds one hash-shuffle chain keyed by ITS entity, so skew in "
-        "one family never blocks the other."
-    ),
-    "two_phase_1h_10m": (
-        "Scale path for windows: map-side combined partials per "
-        "(key, bucket) collapse the data BEFORE the only shuffle; the "
-        "merge window runs over ~|keys| x |buckets| rows. At 10^12 "
-        "events the shuffle moves pre-aggregated rows only."
-    ),
-    "salted_user_stats": (
-        "Two-level agg: partials per (key, data-derived salt) then "
-        "merge per key — a single hot key's rows spread over n_salts "
-        "reducers. DECIMAL partials keep the result bit-identical "
-        "across any physical layout."
-    ),
-    "minhash_lsh": (
-        "Explicit repartition(parallelism) before the md5 stage "
-        "(defeats AQE's coalesce-to-1 on small bytes with heavy CPU); "
-        "staged selects stop Catalyst re-evaluating the shingle/hash "
-        "arrays; ONE shuffle on (band, bsig); bucket cap bounds the "
-        "local pair fan-out."
-    ),
-    "token_freq": (
-        "orderBy+limit compiles to TakeOrderedAndProject — "
-        "per-partition top-k, merged on the driver; no single-partition "
-        "window over the (unbounded) vocabulary."
-    ),
-    "ann_ivf_kmeans": (
-        "Lloyd iterations: assignment is a map-only scan against "
-        "centroid literals (no shuffle), per-dim means via posexplode "
-        "+ one narrow aggregate; per-iteration driver collect is k "
-        "rows. Probe/scan is the same broadcast equi-join as ann_ivf."
-    ),
-    "kp_filtered": (
-        "Filtered keep_previous FUSED: lag IGNORE NULLS walks update "
-        "rows with a per-feature updates-first tie order (one exchange, "
-        "no Union; the tie-ordered lags add one Window pass below the "
-        "RANGE fill) — versions count updates incl. same-ts ones, the "
-        "age guard anchors at the latest update's ts."
-    ),
-    "store_read_pit": (
-        "Production read: per-fqn partition-PRUNED scans of the "
-        "materialized store (fqn hive dirs → PartitionFilters), "
-        "union-merged in ONE as-of pass on the encoded key. The write "
-        "half (replay + partitionBy(fqn)) is the same plan the "
-        "backfill sink uses; at 10^12 rows reads touch only the "
-        "requested features' files."
-    ),
-    "online_serve": (
-        "Log-structured online read: fqn partition prune + ONE hash "
-        "shuffle for the newest-per-(fqn, keys) row_number — "
-        "deterministic (ts, value)-desc tie rule; the staleness cutoff "
-        "is a scalar comparison against the broadcast as_of."
-    ),
-    "repetition": (
-        "CPU-heavy per-row shingling: explicit repartition(parallelism) "
-        "spreads rows before the transform (a single parquet split "
-        "would otherwise serialize the whole corpus through one task; "
-        "AQE coalesces small-bytes exchanges, so the N is explicit). "
-        "Token split staged before the shingle lambda (2x at sf0.1; "
-        "see decontaminate note)."
-    ),
-    "doc_chunks": (
-        "Context-window chunking: sequence + substr inside transform, "
-        "explode is the only fan-out — ZERO shuffles, embarrassingly "
-        "parallel at any corpus size."
-    ),
-    "cms_heavy_hitters": (
-        "CMS build: the d-cell explode collapses via map-side combine "
-        "to <= d*width partial rows per partition before the ONE "
-        "aggregate shuffle; the finished sketch broadcasts for the "
-        "estimate join (no corpus re-shuffle). Exact counts for the "
-        "comparison column are the only vocabulary-wide shuffle — at "
-        "100 TB you carry the sketch INSTEAD of that groupBy."
-    ),
-    "value_quantiles": (
-        "Exact grouped percentiles: sort-based percentile aggregate "
-        "with partial aggregation — one shuffle on the group key; "
-        "|event_type| groups bound the final state. For "
-        "high-cardinality groups at 100 TB, swap to approx_percentile "
-        "(t-digest partials) — same plan shape."
-    ),
-    "pack_sequences": (
-        "Two-level distributed prefix sum: arithmetic block assignment "
-        "from the 60-bit order hash (no repartitionByRange sampling), "
-        "per-block totals map-side combined to <=n_blocks rows, block "
-        "offsets broadcast, ONE corpus shuffle for the within-block "
-        "cumsum. The plan's one no-partition window runs over the "
-        "n_blocks-row AGGREGATE (bounded by construction), never the "
-        "corpus — at 100 B docs with 2^16 blocks it sorts 65k rows."
-    ),
-    "decontaminate": (
-        "Probe (benchmark) n-gram hashes BROADCAST to the corpus scan "
-        "— a 100 TB corpus is one scan + map-side hash join; the only "
-        "shuffle is the (doc, probe) collision count over rows that "
-        "actually collided. 60-bit md5 longs keep the broadcast and "
-        "shuffle keys at 8 bytes. The token split is STAGED in its "
-        "own select before the shingle transform — a lambda-embedded "
-        "split(norm(text)) re-evaluates per element (O(positions x "
-        "text_len) per doc); staging it took this query 21.1 s -> "
-        "1.6 s at sf0.1 (13x), bit-identical output."
-    ),
-    "clean_corpus": (
-        "Composed cleaning pipeline: quality/token/lang filters are "
-        "per-row JVM exprs evaluated in the scan stage, so dropped "
-        "docs never reach the ONE shuffle (the fingerprint dedup "
-        "window). rep + dup-count share a single window pass."
-    ),
-    "pit_asof_join": (
-        "Union-merge as-of: spine and feature rows are tagged, "
-        "unioned, and resolved with last(ignorenulls) over ONE hash "
-        "shuffle + sort — O(n log n per key) vs a range join's "
-        "O(spine x history)."
-    ),
-    "unigram_logprob": (
-        "Corpus-self-trained unigram LM filter: tokenize map-side, "
-        "ONE shuffle counts the vocabulary, the corpus total comes "
-        "back via a broadcast of the 1-row aggregate (the only "
-        "single-partition exchange — it receives one pre-reduced "
-        "partial per partition, never rows), token->surprisal join "
-        "(AQE broadcasts the Zipf-bounded vocab when it fits), ONE "
-        "shuffle for the per-doc sum. Surprisal is integer-quantized "
-        "pre-sum, so the aggregate is order/partitioning-independent."
-    ),
-    "conv_rollup": (
-        "groupBy().pivot() with an EXPLICIT pivot-value list — no "
-        "distinct pre-scan job (at 10^12 turns the role/tool "
-        "vocabulary is config, not discovered). JSON prop extraction "
-        "is get_json_object in the scan projection; the pivot is ONE "
-        "hash shuffle with map-side partials per (key x type) cell."
-    ),
-    "lsh_verify": (
-        "Candidates -> verify: O(len^2) Levenshtein runs ONLY on the "
-        "banded, capped LSH candidate pairs. The two doc-text lookups "
-        "are equi-joins where the small pair side broadcasts (AQE), "
-        "so the corpus is scanned once per side and never shuffled."
-    ),
-    "embedding_quantize": (
-        "Map-only: per-vector int8 quantization + reconstruction MSE "
-        "as Catalyst higher-order functions (transform/zip_with/"
-        "aggregate), zero shuffle at any scale; maxabs is staged in "
-        "its own projection so it is not re-evaluated per element. "
-        "split_assign / embedding_project share this shape (pure "
-        "map-side hash / literal-matrix projections)."
-    ),
-    "bm25_search": (
-        "df/idf stats in ONE token shuffle (map-side combined), query "
-        "terms + doc-frequency table broadcast back; per-doc scoring "
-        "is a map-side join + aggregate, and top-k is "
-        "TakeOrderedAndProject (never a global sort)."
-    ),
-    "boilerplate_scrub": (
-        "Segmenting is map-side (split + slice in transform, one "
-        "explode); the corpus is deliberately scanned twice (boiler "
-        "build + flag side) — a second embarrassingly-parallel scan "
-        "beats materializing segmented text; ONE shuffle counts "
-        "distinct docs per segment (within-doc repeats deduped "
-        "map-side via array_distinct, so a plain count suffices); the "
-        "Zipf-small boilerplate set returns as an explicit broadcast "
-        "left join so the corpus-sized side never shuffles for the "
-        "membership test; ONE final shuffle regroups survivors per "
-        "doc, reassembled by array_sort inside the aggregate (no "
-        "window, no skew pivot — seg_idx is unique per doc)."
-    ),
-    "fuzzy_dedup": (
-        "End-to-end dedup: LSH pair generation + CC run on the "
-        "candidate subgraph only (banded, capped buckets; edges "
-        "localCheckpoint'ed once, label propagation batched 2 hops/ "
-        "round — the audited plan shows the final stage because CC's "
-        "driver loop materialized upstream). Corpus-side filter is an "
-        "explicit broadcast LEFT ANTI join against the small "
-        "duplicate-id set + a broadcast left join for cluster sizes: "
-        "the full corpus is ONE scan with map-side probes."
-    ),
-    "semantic_dedup": (
-        "Same keep-representatives tail as fuzzy_dedup, fed by "
-        "embedding-LSH cosine pairs (equi-join on hyperplane bucket, "
-        "never all-pairs; n_planes auto-sizing keeps mean bucket "
-        "bounded at any corpus size)."
-    ),
-    "tokenize_corpus": (
-        "Tokenize map-side (JVM regex + posexplode); ONE map-side-"
-        "combined shuffle counts the vocabulary; rank ids come from a "
-        "row_number over the TRUNCATED top-vocab_size frame (bounded "
-        "by construction, never the corpus — the same deliberate "
-        "exception as pack_sequences' block offsets); the token->id "
-        "map broadcasts back for a map-side probe; ONE final shuffle "
-        "regroups ids per doc, position-ordered by array_sort inside "
-        "the aggregate (no window over the corpus)."
-    ),
-    "dedup_incremental": (
-        "Incremental (batch-vs-corpus) dedup: the corpus materializes "
-        "aggregated signature stores ONCE (fingerprints; LSH band "
-        "signatures — narrow keys + counts, 1-2% of corpus bytes); "
-        "each new batch's fingerprints and band rows BROADCAST to "
-        "map-side probes of the stores, so the corpus side never "
-        "shuffles per increment; per-doc flags aggregate the batch-"
-        "sized hit rows. For un-broadcastable increments the stores "
-        "persist bucketed by key and the equi-joins co-locate."
-    ),
-    "domain_cap": (
-        "Salted two-level per-group top-n: pass 1 ranks within "
-        "(domain, salt) so the hottest domain's rows spread over "
-        "n_salts reducers; pass 2 re-ranks the <= n*n_salts survivors "
-        "per domain. A naive single window would put every row of a "
-        "mega-domain through one reducer. Quality is round6-quantized "
-        "so the rank order is engine-portable; the salt is a pure "
-        "function of doc_id (deterministic under re-execution)."
-    ),
-    "quality_classifier": (
-        "Model-based quality filter: gradient-descent training runs "
-        "BEFORE the audited plan (one aggregate per iteration over "
-        "the bounded first-ids sample, integer-quantized partials, "
-        "map-side combined; driver collects 5 scalars/iter); the "
-        "audited scoring plan is MAP-ONLY — trained weights are "
-        "literals, features are JVM regex/arithmetic, no join, no "
-        "shuffle. The algebraic fast sigmoid (no exp) keeps every bit "
-        "engine-portable; the oracle replays the identical iterations."
-    ),
-    "budget_sample": (
-        "Token-budget mixture fill: the per-source running total is a "
-        "TWO-LEVEL prefix sum (hash key's high bits give order-aligned "
-        "blocks; in-block window covers ~1/n_blocks of a source; block "
-        "offsets ride a window over the tiny source x block frame and "
-        "broadcast back) — a naive running total would push every row "
-        "of the largest source through ONE reducer. BIGINT sums make "
-        "the two-level grouping exactly equal to the oracle's naive "
-        "form."
-    ),
-    "repeated_span_scrub": (
-        "Exact repeated-substring scrub, 4 exchanges: the corpus is "
-        "deliberately scanned+spread twice (explicit repartition on "
-        "each reference — shingle side and output side — same "
-        "two-scan rationale as boilerplate_scrub: an embarrassingly "
-        "parallel rescan beats materializing the tokenized corpus), "
-        "plus ONE hash-key count exchange (partial-agg combined) and "
-        "ONE per-doc coverage regroup. Shingle hashes are staged in "
-        "their own select (md5 once per shingle); the repeated set "
-        "joins back on the hash (broadcast when Zipf-small); span "
-        "membership tests run inside the staged token array, never a "
-        "join per position. No window anywhere; the corpus never sorts."
-    ),
-    "bloom_dedup": (
-        "Bloom build: k positions explode into ONE bit_or exchange "
-        "that map-side combines to <= m/63 occupied words; the "
-        "finished filter broadcasts, so the batch probe is map-only "
-        "(explode + broadcast-left join + bool_and regroup on the "
-        "batch key). The ground-truth join is a broadcast of the "
-        "distinct corpus fingerprints — at real scale the truth "
-        "column is dropped and ONLY the sketch path runs; it exists "
-        "here so the oracle can see the no-false-negative guarantee."
-    ),
-    "url_dedup": (
-        "URL canonicalization is map-only (JVM regex + query-param "
-        "list filter); the dedup is ONE count aggregate on the "
-        "canonical key with min-id keeper. At 100 TB the canonical "
-        "key is near-unique so the exchange carries ~1 row per URL "
-        "after map-side combine."
-    ),
-    "hybrid_search": (
-        "Two-stage retrieval: bm25_topk supplies <= k_lex candidates "
-        "(tokens shuffle once, query-term-filtered; top-k via "
-        "TakeOrderedAndProject — that stage's shape is the bm25_search "
-        "row; here it sits behind a localCheckpoint so the candidate "
-        "set materializes exactly once despite two references), then "
-        "stage 2 — the audited plan — touches ONLY candidate rows: "
-        "broadcast-semi restricts the embeddings scan to candidate "
-        "ids, a broadcast LEFT join keeps candidates without an "
-        "embedding row (cosine guard scores them 0.0), the 1-row "
-        "query vector rides a broadcast cross join, and the bm25 max "
-        "/ final rank are windows over the bounded candidate frame."
-    ),
-    "bucket_merge_dedup": (
-        "Cleanup-MERGE semantics (J6/S8): alive + dead flush streams "
-        "union, then ONE window keyed (fqn, keys, bucket) keeps the "
-        "final (dead) flush, highest flush_seq among alive-only "
-        "buckets. Rows per window partition are bounded by the flush "
-        "multiplicity of one bucket; the exchange carries the flush "
-        "stream, never source data."
-    ),
-    "profile_docs": (
-        "Per-column corpus audit with ZERO Expand (the "
-        "multi-countDistinct shape that multiplies every corpus row "
-        "by n_cols is gone): non-distinct metrics ride ONE wide "
-        "map-side-combined aggregate; exact cardinalities come from "
-        "a stacked (col_name, value) single-countDistinct — Catalyst "
-        "rewrites the lone distinct into two-phase partial-distinct, "
-        "so only unique pairs shuffle; the 5-row result broadcasts "
-        "back. exact_distinct=False drops the second pass entirely "
-        "(approx_count_distinct in the wide agg)."
-    ),
-}
 
 
 # queries whose no-partition window runs over a pre-aggregated frame
@@ -448,8 +130,11 @@ def main() -> None:
         "|---|---|---|---|---|---|",
     ]
     notes = []
-    for name in NOTES:
-        df = QUERIES[name](spark, SF)
+    for q in REGISTRY:
+        if q.note is None:
+            continue
+        name = q.name
+        df = q.build(spark, SF)
         a = audit(name, df)
         if a["unbounded_global_windows"]:
             # BOUNDED_WINDOW: frames bounded by construction but not
@@ -468,7 +153,7 @@ def main() -> None:
             f"| {name} | {a['shuffles']} | {a['broadcasts']} | {exp} | "
             f"{flag} | {a['read_cols']} |"
         )
-        notes.append(f"\n## {name}\n\n{NOTES[name]}\n")
+        notes.append(f"\n## {name}\n\n{q.note}\n")
     lines.append(
         "\nScan-column counts show projection pushdown: every scan reads "
         "only the columns the query needs (the `documents`/`events` "
