@@ -155,7 +155,6 @@ def backfill(
     fs: FeatureSetSpec,
     out_dir: str,
     n_shards: int = 16,
-    shard_key: Optional[str] = None,
     shard_col: Optional[str] = None,
     resume: bool = True,
     source_id: str = "source",
@@ -165,7 +164,7 @@ def backfill(
 ) -> BackfillResult:
     """Run the historical plan shard-wise with per-shard commit.
 
-    shard_key defaults to the key feature's first key column. Each shard
+    Shards key on the key feature's first key column: each shard
     filters the SOURCE on ``pmod(xxhash64(key), n_shards) == k``. A hash
     predicate prunes NOTHING in a flat parquet layout — a 16-shard run
     would read the input 16× — so when the source is catalog-laid-out,
@@ -190,7 +189,7 @@ def backfill(
     fail_after_shard: test hook — raise after committing shard k to
     simulate a killed run (resume covered by tests).
     """
-    key = shard_key or fs.resolve_key_feature().keys[0]
+    key = fs.resolve_key_feature().keys[0]
     ts_col = fs.resolve_key_feature().timestamp_col
 
     key_hash_expr = F.pmod(F.xxhash64(F.col(key)), F.lit(n_shards))

@@ -7,6 +7,8 @@
   (``/root/reference/labsdk/raptor/replay.py:246-261``): at a query
   time, version N = the N-th newest value ≤ ts, **invalid when its ts <
   ts_of_latest − N·over** (the age guard).
+  ``guarded_lag`` is that version column on its own — shared with the
+  fused historical plan's keep_previous.
 - ``with_leads``: forward-looking turn features (north rule) — label
   engineering only; never joined as-of backward, so leakage-safe by
   construction when used on the label side.
@@ -23,6 +25,7 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql.window import WindowSpec
 from pyspark.sql import functions as F
 
 from .tsutil import micros
@@ -51,14 +54,24 @@ def with_lags(
     w = _key_window(keys, ts_col, tiebreak)
     prefix = prefix if prefix is not None else col
     out = df
+    v, tsu = F.col(col), micros(ts_col)
     for n in range(1, versions + 1):
-        lagged = F.lag(F.col(col), n).over(w)
-        if over_us and over_us > 0:
-            lag_ts = F.lag(micros(ts_col), n).over(w)
-            guard = lag_ts >= micros(ts_col) - F.lit(n * over_us)
-            lagged = F.when(guard, lagged)
+        lagged = guarded_lag(v, tsu, n, w, over_us)
         out = out.withColumn(f"{prefix}_prev{n}", lagged)
     return out
+
+
+def guarded_lag(
+    col: Column, tsu: Column, n: int, w: WindowSpec, over_us: int = 0
+) -> Column:
+    """Version n of ``col``: ``lag(col, n)`` over ``w``, NULL when the
+    lagged row's ``tsu`` (epoch µs) < the current ``tsu`` − n·over
+    (the reference age guard, replay.py:256-259; over=0 ⇒ no guard)."""
+    lagged = F.lag(col, n).over(w)
+    if over_us and over_us > 0:
+        lag_ts = F.lag(tsu, n).over(w)
+        lagged = F.when(lag_ts >= tsu - F.lit(n * over_us), lagged)
+    return lagged
 
 
 def with_leads(

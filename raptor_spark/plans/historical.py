@@ -19,67 +19,81 @@ inputs are padded back by each feature's staleness
 complete; padding rows are dropped after the merge (``data`` vs
 ``base`` CTE, featureset.tmpl.sql:51).
 
-keep_previous (W2): realized plan-side — the feature-values stream is
-pre-lagged per key (lag N of value & ts + age guard,
-replay.py:246-261) and the lagged columns ride the same union-merge.
+keep_previous (W2): realized plan-side by ONE pack both union-merge
+reads use — recompute (``get_historical``) and store
+(``historical_from_store``). ``_pack_versions`` adds a struct
+``_kp_<col>`` per value column holding its N previous versions (lag
+IGNORE NULLS per key + age guard, replay.py:246-261), non-null only at
+the column's own update rows; the struct rides the same union-merge as
+the value and is expanded after it. The fused plan computes the same
+versions as window columns of its single pass.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from functools import reduce
 from typing import Literal, Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F, Window as W
 
+from ..operators.asof import asof_join
+from ..operators.laglead import guarded_lag
 from ..operators.tsutil import micros
 
-from ..specs import FeatureSetSpec, FeatureSpec
-from .replay import replay_wide
+from ..specs import FeatureSetSpec, FeatureSpec, KeepPreviousSpec
+from .replay import _eval_expr, encode_keys, replay_wide
 
 
-def _lag_feature_values(
-    fv: DataFrame, spec: FeatureSpec, value_cols: Sequence[str]
-) -> tuple[DataFrame, list[str]]:
-    """Materialize keep_previous versions on the feature-values stream
-    (lag over the value history per key) — PACKED into ONE struct
-    column ``_kp_<name>`` per feature rather than separate columns.
+def _pack_versions(
+    fv: DataFrame,
+    keys: Sequence[str],
+    cols: Sequence[str],
+    kp: Optional[KeepPreviousSpec],
+) -> DataFrame:
+    """Add one struct ``_kp_<col>`` per value column: its keep_previous
+    versions ``<col>_prev1..N`` — version n = the n-th previous
+    non-null ``col`` per key (rows of other columns interleave on the
+    stream → IGNORE NULLS) with the age guard — non-null only at the
+    column's own update rows.
 
     The pack is what keeps versions PIT-consistent through the as-of
     merge: ``asof_join`` forward-fills each column independently with
     ``last(ignorenulls)``, so a separate prev column whose age guard
     nulled it AT the latest update would be "filled past" — the join
-    would resurrect an older update's (younger-at-the-time) version,
-    e.g. prev1 = the value from TWO updates back, disagreeing with the
-    fused plan and the reference's latest-update-anchored versioning
-    (caught by review r3, runtime-confirmed). A struct is non-null at
-    every update row even when its FIELDS are guard-nulled, so the
-    fill always lands on the same winning row as the base value.
-    Unpacked after the join by ``_unpack_kp``."""
-    kp = spec.keep_previous
+    would resurrect an older update's version (review r3). The struct
+    is non-null at every update row of its column even when its FIELDS
+    are guard-nulled, so the fill lands on the same row as the value.
+    Same-ts ties need no order: the pack is read only at the column's
+    own update rows, and IGNORE NULLS skips the others wherever they
+    sort. Expanded after the join by ``_unpack_kp``."""
     if kp is None:
-        return fv, list(value_cols)
-    w = W.partitionBy(*spec.keys).orderBy(F.col("ts").asc())
-    fields = []
-    for n in range(1, kp.versions + 1):
-        lag_ts = F.lag(micros("ts"), n).over(w)
-        guard = (
-            lag_ts >= micros("ts") - F.lit(n * kp.over_us)
-            if kp.over_us > 0
-            else F.lit(True)
+        return fv
+    w = W.partitionBy(*keys).orderBy("ts")
+    tsu = micros("ts")
+    packs = []
+    for c in cols:
+        upd_ts = (
+            f"CASE WHEN `{c}` IS NOT NULL THEN "
+            "unix_micros(cast(ts as timestamp)) END"
         )
-        for c in value_cols:
-            fields.append(
-                F.when(guard, F.lag(F.col(c), n).over(w)).alias(f"{c}_prev{n}")
-            )
-    pack = f"_kp_{spec.name}"
-    out = fv.select("*", F.struct(*fields).alias(pack))
-    return out, list(value_cols) + [pack]
+        fields = []
+        for n in range(1, kp.versions + 1):
+            lagged = F.expr(f"lag(`{c}`, {n}) ignore nulls").over(w)
+            if kp.over_us > 0:
+                lag_ts = F.expr(f"lag({upd_ts}, {n}) ignore nulls").over(w)
+                lagged = F.when(lag_ts >= tsu - F.lit(n * kp.over_us), lagged)
+            fields.append(lagged.alias(f"{c}_prev{n}"))
+        packs.append(
+            F.when(F.col(c).isNotNull(), F.struct(*fields)).alias(f"_kp_{c}")
+        )
+    return fv.select("*", *packs)
 
 
 def _unpack_kp(df: DataFrame) -> DataFrame:
-    """Expand ``_kp_*`` struct columns (see ``_lag_feature_values``)
-    into their prev-version fields, in place."""
+    """Expand ``_kp_*`` struct columns (see ``_pack_versions``) into
+    their prev-version fields, in place."""
     if not any(c.startswith("_kp_") for c in df.columns):
         return df
     cols = []
@@ -109,6 +123,89 @@ def _kp_pad_us(spec: FeatureSpec) -> int:
             "Use over>0 or since=None."
         )
     return kp.versions * kp.over_us
+
+
+def _pad_range(
+    df: DataFrame,
+    ts_col: str,
+    since: Optional[dt.datetime],
+    until: Optional[dt.datetime],
+    specs: Sequence[FeatureSpec] = (),
+) -> DataFrame:
+    """Keep rows in [since − pad, until], pad = the largest staleness +
+    keep_previous lookback of ``specs`` (no specs ⇒ no pad)."""
+    if since is not None:
+        pad_us = max(
+            (f.effective_staleness_us + _kp_pad_us(f) for f in specs),
+            default=0,
+        )
+        df = df.filter(
+            F.col(ts_col) >= F.lit(since - dt.timedelta(microseconds=pad_us))
+        )
+    if until is not None:
+        df = df.filter(F.col(ts_col) <= F.lit(until))
+    return df
+
+
+def _require_keys(spine: DataFrame, spec: FeatureSpec) -> None:
+    missing = [k for k in spec.keys if k not in spine.columns]
+    if missing:
+        raise ValueError(
+            f"feature '{spec.name}' is keyed by {tuple(spec.keys)} but the "
+            f"spine lacks column(s) {missing}; the spine row must carry "
+            "every entity key it joins on (featureset.tmpl.sql joins "
+            "f.KEYS = key.KEYS)"
+        )
+
+
+def _asof_family(
+    spine: DataFrame,
+    members: list[tuple[FeatureSpec, DataFrame]],
+    keys: Sequence[str],
+) -> DataFrame:
+    """As-of join one key family onto ``spine`` in ONE union-merge pass:
+    each member frame is keys + ts + value columns (packs included);
+    values get their feature's staleness cutoff (W4), packs none — a
+    prev version carries its own age guard. Packs are expanded after."""
+    value_cols: list[str] = []
+    staleness: dict[str, int] = {}
+    for spec, fv in members:
+        for c in fv.columns:
+            if c not in (*keys, "ts"):
+                value_cols.append(c)
+                staleness[c] = (
+                    0 if c.startswith("_kp_") else spec.effective_staleness_us
+                )
+    merged = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [fv for _, fv in members],
+    )
+    return _unpack_kp(
+        asof_join(
+            spine, merged, keys=list(keys), ts_col="ts",
+            value_cols=value_cols, staleness_us=staleness,
+        )
+    )
+
+
+def _finish(
+    out: DataFrame,
+    fs: FeatureSetSpec,
+    spine_cols: Sequence[str],
+    since: Optional[dt.datetime],
+) -> DataFrame:
+    """Tail every read shares: derived (sourceless) features over the
+    wide frame in dependency order (J4), the ``since`` cut (padding
+    rows out), and one column order — the spine's columns, then each
+    feature's ``output_columns()`` in declaration order."""
+    for spec in fs.derived_topo():
+        out = out.withColumn(spec.name, _eval_expr(out, spec.expr))
+    if since is not None:
+        out = out.filter(F.col("ts") >= F.lit(since))
+    feature_cols = [c for f in fs.features for c in f.output_columns()]
+    cols = [c for c in spine_cols if c not in feature_cols] + feature_cols
+    # a no-op select still costs a plan analysis per call (per shard)
+    return out if out.columns == cols else out.select(*cols)
 
 
 def _expr_total(spec: FeatureSpec) -> bool:
@@ -163,24 +260,12 @@ def get_historical_fused(
     - keep_previous = plain lag (every row is an update for unfiltered
       exprs) with the reference age guard (replay.py:256-259).
     """
-    from pyspark.sql import Window as W
-
     from ..operators.window_agg import _agg_over
-    from .replay import _eval_expr
 
     key_feature = fs.resolve_key_feature()
     keys, ts_col = key_feature.keys, "ts"
-
-    df = source
-    if since is not None:
-        pad_us = max(
-            f.effective_staleness_us + _kp_pad_us(f) for f in fs.features
-        )
-        df = df.filter(
-            F.col(ts_col) >= F.lit(since - dt.timedelta(microseconds=pad_us))
-        )
-    if until is not None:
-        df = df.filter(F.col(ts_col) <= F.lit(until))
+    base = fs.base_features()
+    df = _pad_range(source, ts_col, since, until, base)
 
     # EARLY PROJECTION: evaluate every per-row expr BEFORE the shuffle
     # so the Exchange carries (keys, ts, small typed values) — never the
@@ -189,7 +274,7 @@ def get_historical_fused(
     # because the exprs sit inside window functions.
     proj = [F.col(k) for k in keys] + [F.col(ts_col)]
     vname: dict[str, str] = {}
-    for i, spec in enumerate(fs.features):
+    for i, spec in enumerate(base):
         v = _eval_expr(df, spec.expr)
         if spec.filter:
             v = F.when(F.expr(spec.filter), v)
@@ -223,7 +308,7 @@ def get_historical_fused(
 
     out_cols: list = []
     key_value = None
-    for spec in fs.features:
+    for spec in base:
         v = F.col(vname[spec.name])
         if spec.aggr is not None:
             a = spec.aggr
@@ -293,12 +378,7 @@ def get_historical_fused(
                 for n in range(1, kp.versions + 1):
                     if _expr_total(spec):
                         # total expr: every row is an update → plain lag
-                        lagged = F.lag(v, n).over(lag_w)
-                        if kp.over_us > 0:
-                            lag_ts = F.lag(tsu, n).over(lag_w)
-                            lagged = F.when(
-                                lag_ts >= tsu - F.lit(n * kp.over_us), lagged
-                            )
+                        lagged = guarded_lag(v, tsu, n, lag_w, kp.over_us)
                     else:
                         # filtered expr: versions count UPDATE rows. At a
                         # row the latest update is itself (v non-null) or
@@ -336,9 +416,7 @@ def get_historical_fused(
     # (fs.go:35-49)
     if key_value is not None:
         out = out.filter(F.col("_spine")).drop("_spine")
-    if since is not None:
-        out = out.filter(F.col(ts_col) >= F.lit(since))
-    return out
+    return _finish(out, fs, [*keys, ts_col], since)
 
 
 def historical_from_store(
@@ -360,22 +438,16 @@ def historical_from_store(
     ONE as-of pass on the ENCODED key string (f.KEYS = key.KEYS —
     heterogeneous entities welcome, the encoding carries them). The
     spine must contain every feature's raw key columns; its keys are
-    encoded with the same ';'.join.
+    encoded with the same ';'.join. keep_previous versions are packed
+    over the per-fqn update stream (``_pack_versions``).
 
     value_types: per-feature stored value type (default 'double' — the
     type of every windowed value and the common primitive case).
     """
-    from ..operators.asof import asof_join
-    from .replay import encode_keys
-
     ts_col = "ts"
-    staleness: dict[str, int] = {}
-    # family (key tuple) → (frames, value cols): features sharing an
-    # entity share one union-merge pass on the encoded key string
-    families: dict[tuple[str, ...], tuple[list[DataFrame], list[str]]] = {}
-    for spec in fs.features:
-        if spec.derived_inputs is not None:
-            continue
+    families: dict[tuple[str, ...], list[tuple[FeatureSpec, DataFrame]]] = {}
+    for spec in fs.base_features():
+        _require_keys(spine, spec)
         vt = (value_types or {}).get(spec.name, "double")
         if spec.aggr is not None:
             fqn_cols = [
@@ -383,13 +455,10 @@ def historical_from_store(
             ]
         else:
             fqn_cols = [(spec.fqn, spec.name)]
-        df = catalog.read_feature_values(table, [f for f, _ in fqn_cols], vt)
-        if since is not None:
-            pad_us = spec.effective_staleness_us + _kp_pad_us(spec)
-            lo = since - dt.timedelta(microseconds=pad_us)
-            df = df.filter(F.col(ts_col) >= F.lit(lo))
-        if until is not None:
-            df = df.filter(F.col(ts_col) <= F.lit(until))
+        df = _pad_range(
+            catalog.read_feature_values(table, [f for f, _ in fqn_cols], vt),
+            ts_col, since, until, [spec],
+        )
         fv = df.select(
             F.col("keys").alias("_keys"),
             F.col(ts_col),
@@ -398,89 +467,16 @@ def historical_from_store(
                 for f, c in fqn_cols
             ],
         )
-        pack_cols: list[str] = []
-        if spec.keep_previous is not None:
-            # keep_previous from the STORE: the per-fqn rows ARE the
-            # update stream, so version n = n-th previous non-null of
-            # the column (rows for sibling fqns of one feature
-            # interleave → IGNORE NULLS; ties sort updates-first like
-            # the fused plan). Versions are PACKED into a struct per
-            # column, non-null exactly at the column's own update rows,
-            # so the as-of forward-fill carries (value, prev*) as ONE
-            # consistent PIT version — a guard-expired prev stays
-            # expired instead of being filled past from an older update
-            # (see _lag_feature_values).
-            kp = spec.keep_previous
-            tsu_c = micros(ts_col)
-            pack_exprs = []
-            for _, c in fqn_cols:
-                tie_w = W.partitionBy("_keys").orderBy(
-                    tsu_c, F.col(c).isNull()
-                )
-                c_ts_sql = (
-                    f"CASE WHEN `{c}` IS NOT NULL THEN "
-                    f"unix_micros(cast({ts_col} as timestamp)) END"
-                )
-                fields = []
-                for n in range(1, kp.versions + 1):
-                    lagged = F.expr(f"lag(`{c}`, {n}) ignore nulls").over(
-                        tie_w
-                    )
-                    if kp.over_us > 0:
-                        lag_ts = F.expr(
-                            f"lag({c_ts_sql}, {n}) ignore nulls"
-                        ).over(tie_w)
-                        lagged = F.when(
-                            lag_ts >= tsu_c - F.lit(n * kp.over_us), lagged
-                        )
-                    fields.append(lagged.alias(f"{c}_prev{n}"))
-                pack_exprs.append(
-                    F.when(F.col(c).isNotNull(), F.struct(*fields)).alias(
-                        f"_kp_{c}"
-                    )
-                )
-                pack_cols.append(f"_kp_{c}")
-            fv = fv.select("*", *pack_exprs)
-        missing = [k for k in spec.keys if k not in spine.columns]
-        if missing:
-            raise ValueError(
-                f"spine lacks key column(s) {missing} for feature "
-                f"'{spec.name}'"
-            )
-        frames, cols = families.setdefault(tuple(spec.keys), ([], []))
-        frames.append(fv)
-        st = spec.effective_staleness_us
-        for _, c in fqn_cols:
-            staleness[c] = st
-            cols.append(c)
-        for c in pack_cols:
-            # prev versions carry their own age guard (no W4 cutoff)
-            staleness[c] = 0
-            cols.append(c)
+        fv = _pack_versions(
+            fv, ["_keys"], [c for _, c in fqn_cols], spec.keep_previous
+        )
+        families.setdefault(tuple(spec.keys), []).append((spec, fv))
 
     out = spine
-    for fam_keys, (frames, cols) in families.items():
-        merged = frames[0]
-        for f in frames[1:]:
-            merged = merged.unionByName(f, allowMissingColumns=True)
+    for fam_keys, members in families.items():
         tagged = out.withColumn("_keys", encode_keys(out, fam_keys))
-        out = _unpack_kp(
-            asof_join(
-                tagged, merged, keys=["_keys"], ts_col=ts_col,
-                value_cols=cols,
-                staleness_us={c: staleness[c] for c in cols},
-            ).drop("_keys")
-        )
-
-    derived = fs.derived_topo()
-    if derived:
-        from .replay import _eval_expr
-
-        for spec in derived:
-            out = out.withColumn(spec.name, _eval_expr(out, spec.expr))
-    if since is not None:
-        out = out.filter(F.col(ts_col) >= F.lit(since))
-    return out
+        out = _asof_family(tagged, members, ["_keys"]).drop("_keys")
+    return _finish(out, fs, spine.columns, since)
 
 
 def get_historical(
@@ -502,26 +498,13 @@ def get_historical(
 
     Derived (sourceless) features — ``derived_inputs`` set — are
     applied over the wide frame after the base pass, in dependency
-    order (J4).
+    order (J4). Every read returns the spine's columns, then each
+    feature's ``output_columns()`` in declaration order (``_finish``).
     """
-    derived = fs.derived_topo()
-    if derived:
-        base_fs = FeatureSetSpec(
-            features=fs.base_features(), key_feature=fs.key_feature
-        )
-        out = get_historical(
-            source, base_fs, spine=spine, since=since, until=until,
-            mode=mode, sources=sources, fuse=fuse,
-        )
-        from .replay import _eval_expr
-
-        for spec in derived:
-            out = out.withColumn(spec.name, _eval_expr(out, spec.expr))
-        return out
-
     key_feature = fs.resolve_key_feature()
     keys = key_feature.keys
     ts_col = "ts"
+    base = fs.base_features()
 
     if sources is not None and all(s is source for s in sources.values()):
         # every feature reads the same frame → eligible for the fused
@@ -534,120 +517,57 @@ def get_historical(
         and sources is None
         and mode == "exact"
         and key_feature.aggr is None
-        and all(_fusible(f, keys, ts_col) for f in fs.features)
+        and all(_fusible(f, keys, ts_col) for f in base)
     ):
         return get_historical_fused(source, fs, since=since, until=until)
 
+    on_spine: list[str] = []
     if spine is None:
+        # the spine carries the key feature's values; its keep_previous
+        # versions (packs) still ride the union-merge below
         kf_src = (sources or {}).get(key_feature.name, source)
-        spine = replay_wide(kf_src, key_feature, mode=mode).select(
-            *keys, ts_col, *[c for c in key_feature.output_columns() if "_prev" not in c]
+        spine = _pad_range(
+            replay_wide(kf_src, key_feature, mode=mode), ts_col, since, until
         )
-        if since is not None:
-            spine = spine.filter(F.col(ts_col) >= F.lit(since))
-        if until is not None:
-            spine = spine.filter(F.col(ts_col) <= F.lit(until))
-        # the spine carries the key feature's base columns; its
-        # keep_previous columns are NOT on the spine (they need the
-        # lag pass) — leave them to the union-merge below
-        joined_from_spine = {
-            c for c in key_feature.output_columns() if "_prev" not in c
-        }
-    else:
-        joined_from_spine = set()
+        on_spine = [c for c in spine.columns if c not in (*keys, ts_col)]
 
     # union-merge all remaining features, ONE as-of pass per KEY FAMILY
     # (features sharing an entity-key tuple ride the same pass). The
     # reference's template joins every feature CTE on its encoded KEYS
     # (featureset.tmpl.sql:104-122) — heterogeneous entities are legal
     # as long as the spine row carries the foreign key columns.
-    from ..operators.asof import asof_join
-
-    families: dict[tuple[str, ...], list[tuple[FeatureSpec, list[str]]]] = {}
-    for spec in fs.features:
-        cols = [c for c in spec.output_columns() if c not in joined_from_spine]
-        if not cols:
-            continue
-        families.setdefault(tuple(spec.keys), []).append((spec, cols))
-
-    if not families:
-        return spine
-
-    def _family_feature_values(
-        members: list[tuple[FeatureSpec, list[str]]], fam_keys: tuple[str, ...]
-    ) -> tuple[DataFrame, list[str], dict[str, int]]:
-        fv_frames: list[DataFrame] = []
-        staleness: dict[str, int] = {}
-        value_cols: list[str] = []
-        for spec, cols in members:
-            f_src = (sources or {}).get(spec.name, source)
-            if since is not None:
-                pad_us = spec.effective_staleness_us + _kp_pad_us(spec)
-                lo = since - dt.timedelta(microseconds=pad_us)
-                f_src = f_src.filter(F.col(spec.timestamp_col) >= F.lit(lo))
-            if until is not None:
-                f_src = f_src.filter(F.col(spec.timestamp_col) <= F.lit(until))
-            fv = replay_wide(f_src, spec, mode=mode)
-            base_cols = [c for c in fv.columns if c not in (*fam_keys, ts_col)]
-            fv, all_cols = _lag_feature_values(fv, spec, base_cols)
-            fv = fv.select(
-                *fam_keys,
-                ts_col,
-                *[c for c in all_cols if c in cols or c.startswith("_kp_")],
+    families: dict[tuple[str, ...], list[tuple[FeatureSpec, DataFrame]]] = {}
+    for spec in base:
+        _require_keys(spine, spec)
+        f_src = _pad_range(
+            (sources or {}).get(spec.name, source), spec.timestamp_col,
+            since, until, [spec],
+        )
+        fv = replay_wide(f_src, spec, mode=mode)
+        fk = (*spec.keys, ts_col)
+        fv = _pack_versions(
+            fv, spec.keys, [c for c in fv.columns if c not in fk],
+            spec.keep_previous,
+        )
+        cols = [c for c in fv.columns if c not in (*fk, *on_spine)]
+        if cols:
+            families.setdefault(tuple(spec.keys), []).append(
+                (spec, fv.select(*fk, *cols))
             )
-            fv_frames.append(fv)
-            st = spec.effective_staleness_us
-            for c in cols:
-                # prev versions ride the _kp_ struct (their own age
-                # guard, evaluated at the update row); the staleness
-                # cutoff applies to the base value (W4).
-                if "_prev" in c:
-                    continue
-                staleness[c] = st
-                if c in fv.columns:
-                    value_cols.append(c)
-            pack = f"_kp_{spec.name}"
-            if pack in fv.columns:
-                staleness[pack] = 0
-                value_cols.append(pack)
-        merged = fv_frames[0]
-        for f in fv_frames[1:]:
-            merged = merged.unionByName(f, allowMissingColumns=True)
-        return merged, value_cols, staleness
 
     # primary family (spine's own keys) merges directly onto the spine
     out = spine
     primary = families.pop(tuple(keys), None)
     if primary is not None:
-        merged, value_cols, staleness = _family_feature_values(primary, tuple(keys))
-        out = _unpack_kp(
-            asof_join(
-                out, merged, keys=keys, ts_col=ts_col,
-                value_cols=value_cols, staleness_us=staleness,
-            )
-        )
+        out = _asof_family(out, primary, keys)
 
     # each foreign family: as-of against the DISTINCT (family-keys, ts)
     # sub-spine — far smaller than the spine when the foreign entity is
     # coarser — then an equi-join back on (family-keys, ts). Two
     # shuffles per family instead of per feature.
     for fam_keys, members in families.items():
-        missing = [k for k in fam_keys if k not in spine.columns]
-        if missing:
-            raise ValueError(
-                f"feature(s) {[s.name for s, _ in members]} are keyed by "
-                f"{fam_keys} but the spine lacks column(s) {missing}; the "
-                "spine row must carry every foreign entity key it joins on "
-                "(featureset.tmpl.sql joins f.KEYS = key.KEYS)"
-            )
         sub_spine = out.select(*fam_keys, ts_col).distinct()
-        merged, value_cols, staleness = _family_feature_values(members, fam_keys)
-        fam_out = _unpack_kp(
-            asof_join(
-                sub_spine, merged, keys=list(fam_keys), ts_col=ts_col,
-                value_cols=value_cols, staleness_us=staleness,
-            )
-        )
+        fam_out = _asof_family(sub_spine, members, fam_keys)
         out = out.join(fam_out, on=[*fam_keys, ts_col], how="left")
 
-    return out
+    return _finish(out, fs, spine.columns, since)

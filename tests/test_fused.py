@@ -5,7 +5,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from raptor_spark.backfill import transcript_feature_set
-from raptor_spark.plans.historical import get_historical, get_historical_fused
+from raptor_spark.plans.historical import get_historical
 from raptor_spark.sources.transcripts import transcripts
 
 

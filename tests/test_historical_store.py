@@ -3,6 +3,9 @@ training set read from the MATERIALIZED feature-values table
 (partition-pruned per-fqn scans, joined on encoded KEYS), equal to the
 recompute-from-source path."""
 
+import datetime as dt
+
+import pytest
 from pyspark.sql import functions as F
 
 from raptor_spark.plans.historical import get_historical, historical_from_store
@@ -44,26 +47,49 @@ def test_store_read_equals_recompute(spark, tmp_path):
     assert "fqn" in plan and "PartitionFilters" in plan
 
 
-def test_store_read_keep_previous_equals_recompute(spark, tmp_path):
+_TURN_LEN_KP = feature(
+    "turn_len", "conv_id", "cast(length(text) as double)",
+    staleness="30m", keep_previous=(2, "1h"),
+)
+_KP_SETS = {
+    "single": [_TURN_LEN_KP],
+    # sibling fqns (one per fn) interleave on the stored update stream
+    "aggr_multi_fn": [
+        _TURN_LEN_KP,
+        feature("len_1h", "conv_id", "cast(length(text) as double)",
+                aggr=["sum", "avg", "max"], over="1h", keep_previous=(2, "1h")),
+    ],
+    "filtered": [
+        _TURN_LEN_KP,
+        feature("tool_len", "conv_id", "cast(length(text) as double)",
+                staleness="2h", filter="role = 'tool'", keep_previous=(2, "2h")),
+    ],
+    "foreign_family": [
+        _TURN_LEN_KP,
+        feature("role_len", "role", "cast(length(text) as double)",
+                staleness="30m", keep_previous=(2, "1h")),
+    ],
+}
+
+
+@pytest.mark.parametrize("kind", list(_KP_SETS))
+def test_store_read_keep_previous_equals_recompute(spark, tmp_path, kind):
     """keep_previous from the store: version columns are lagged over
     the materialized per-fqn update stream — equal to the
     recompute-from-source path (silently dropped before ADVICE r2)."""
     src = transcripts(spark, 10).cache()
-    turn_len = feature(
-        "turn_len", "conv_id", "cast(length(text) as double)",
-        staleness="30m", keep_previous=(2, "1h"),
-    )
-    fs = FeatureSetSpec(features=[turn_len], key_feature="turn_len")
+    fs = FeatureSetSpec(features=_KP_SETS[kind], key_feature="turn_len")
 
     cat = Catalog(spark, root=str(tmp_path))
-    cat.write_feature_values(replay(src, turn_len), "features")
+    for spec in fs.features:
+        cat.write_feature_values(replay(src, spec), "features")
 
-    spine = src.filter(F.col("role") == "user").select("conv_id", "ts")
+    spine = src.filter(F.col("role") == "user").select("conv_id", "role", "ts")
     from_store = historical_from_store(cat, "features", fs, spine)
     recomputed = get_historical(src, fs, spine=spine)
     assert "turn_len_prev1" in from_store.columns
     assert "turn_len_prev2" in from_store.columns
-    assert sorted(from_store.columns) == sorted(recomputed.columns)
+    assert from_store.columns == recomputed.columns
     assert _rows(from_store) == _rows(recomputed)
 
 
@@ -76,8 +102,6 @@ def test_kp_guard_expiry_not_resurrected(spark, tmp_path):
     serve ITS prev1 (1.0 — two versions back); the _kp_ struct pack
     keeps versions pinned to the winning update row (review r3,
     runtime-confirmed). Same contract for the store read."""
-    import datetime as dt
-
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
     src = spark.createDataFrame(
         [
@@ -110,10 +134,6 @@ def test_kp_guard_expiry_not_resurrected(spark, tmp_path):
 def test_unbounded_kp_with_since_raises(spark, tmp_path):
     """keep_previous over=0 (unbounded lookback) + since= cannot be
     finitely padded — must raise, not silently truncate the chain."""
-    import datetime as dt
-
-    import pytest
-
     src = transcripts(spark, 3)
     spec = feature("turn_len", "conv_id", "cast(length(text) as double)",
                    keep_previous=(1, "0"))
@@ -140,3 +160,64 @@ def test_store_read_heterogeneous_families(spark, tmp_path):
     from_store = historical_from_store(cat, "features", fs, spine)
     recomputed = get_historical(src, fs, spine=spine)
     assert _rows(from_store) == _rows(recomputed)
+
+
+def test_every_read_returns_one_column_order(spark, tmp_path):
+    """Every read returns the spine's columns in spine order, then each
+    feature's output_columns() in declaration order — a derived feature
+    in its own declaration slot, aggregated keep_previous versions as
+    output_columns() lists them, foreign-family keys not moved first."""
+    src = transcripts(spark, 6).cache()
+    fusible = FeatureSetSpec(
+        features=[
+            _TURN_LEN_KP,
+            feature("turns_10m", "conv_id", "1", aggr=["count"], over="10m"),
+            feature("len_per_turn", "conv_id", "turn_len / turns_10m_count",
+                    inputs=["turn_len", "turns_10m"]),
+            *_KP_SETS["filtered"][1:],
+        ],
+        key_feature="turn_len",
+    )
+    mixed = FeatureSetSpec(
+        features=_KP_SETS["aggr_multi_fn"] + _KP_SETS["foreign_family"][1:],
+        key_feature="turn_len",
+    )
+    spine = src.filter(F.col("role") != "tool").select(
+        "conv_id", "role", "turn_idx", "ts"
+    )
+    for name, fs in {"fusible": fusible, "mixed": mixed}.items():
+        cat = Catalog(spark, root=str(tmp_path / name))
+        for spec in fs.base_features():
+            cat.write_feature_values(replay(src, spec), "features")
+        want = spine.columns + [c for f in fs.features for c in f.output_columns()]
+        assert get_historical(src, fs, spine=spine).columns == want, name
+        from_store = historical_from_store(cat, "features", fs, spine)
+        assert from_store.columns == want, name
+    default_cols = ["conv_id", "ts"] + [
+        c for f in fusible.features for c in f.output_columns()
+    ]
+    fused = get_historical(src, fusible)
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan  # really the fused plan
+    assert fused.columns == default_cols
+    assert get_historical(src, fusible, fuse=False).columns == default_cols
+
+
+def test_user_spine_since_cut_matches_store(spark, tmp_path):
+    """since= drops spine rows before the range on the recompute read
+    too (padding rows out), so it returns the store read's rows."""
+    src = transcripts(spark, 10).cache()
+    fs = FeatureSetSpec(features=_KP_SETS["filtered"], key_feature="turn_len")
+    cat = Catalog(spark, root=str(tmp_path))
+    for spec in fs.features:
+        cat.write_feature_values(replay(src, spec), "features")
+    since = dt.datetime(2023, 11, 15, 2, 0, 0)
+    until = dt.datetime(2023, 11, 15, 8, 0, 0)
+    spine = src.select("conv_id", "turn_idx", "ts")
+    recomputed = get_historical(src, fs, spine=spine, since=since, until=until)
+    from_store = historical_from_store(
+        cat, "features", fs, spine, since=since, until=until
+    )
+    rows = _rows(recomputed)
+    assert rows and rows == _rows(from_store)
+    assert all(r["ts"] >= since for r in recomputed.select("ts").collect())
